@@ -42,9 +42,9 @@ import org.apache.spark.sql.types._
   *   - NULL: sentinel "@NULL@" (concat_ws silently drops nulls — SURVEY.md
   *     §7.4 "NULL semantics in row hash")
   *
-  * A second, faster lane [[fingerprintFast]] uses `xxhash64` for
-  * engine-internal use (two independent hash lanes per SURVEY.md §7.4
-  * "collision discipline"); only the portable lane is oracle-checked.
+  * A third, engine-internal lane [[multisetLane]] hashes typed values with
+  * a seeded `xxhash64` for the keyless compare's bucket checksums; it is
+  * never oracle-checked and never decides row equality.
   */
 object Canonical {
 
@@ -145,11 +145,40 @@ object Canonical {
   def hex48(hexCol: Column): Column =
     conv(substring(hexCol, 1, 12), 16, 10).cast(LongType)
 
-  /** Engine-internal second hash lane: xxhash64 over the same serial form.
-    * Codegen'd, faster, not reproducible outside Spark.
+  /** Seeded 64-bit hash of a row's typed values — the additive multiset
+    * lane behind [[graft.operators.HashDiff]]'s bucket checksums (Clarke et
+    * al., "Incremental Multiset Hash Functions", ASIACRYPT 2003). It skips
+    * the string serialization: `xxhash64` runs on the decoded values.
+    *
+    * Contract:
+    *   - Atomic columns (integral, floating, decimal, boolean, date,
+    *     timestamp, binary and UTF8_BINARY strings) hash raw. Every
+    *     [[canonical]] form is a function of the typed value, so rows with
+    *     equal typed values have equal serials: a canonical difference
+    *     always changes the lane, while a typed-only one (10.001 vs 10.0)
+    *     may change it without changing the md5 fingerprint.
+    *   - Array, struct, map, collated-string and every other column type
+    *     hash their [[canonical]] JSON/string form: raw hashing skips
+    *     nested nulls, and collation-aware hashing folds case.
+    *   - Each column enters as the pair (isnull(c), c). Spark's hash skips
+    *     nulls, so without the flag (NULL, 5) and (5, NULL) would collide.
+    *   - The lane is comparable only between sides with identical column
+    *     types (an int 5 and a bigint 5 hash differently).
+    *   - It decides bucket ACCEPTANCE only. Row equality is always decided
+    *     on the full 128-bit [[fingerprint]].
     */
-  def fingerprintFast(cols: Seq[(Column, DataType)]): Column =
-    xxhash64(serial(cols))
+  def multisetLane(cols: Seq[(Column, DataType)], seed: Long): Column =
+    xxhash64(lit(seed) +: cols.flatMap { case (c, dt) =>
+      Seq(isnull(c), if (hashesRaw(dt)) c else canonical(c, dt))
+    }: _*)
+
+  private def hashesRaw(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType |
+         DoubleType | BooleanType | DateType | TimestampType |
+         TimestampNTZType | BinaryType | _: DecimalType => true
+    case s: StringType => s == StringType // UTF8_BINARY, as in canonical
+    case _ => false
+  }
 
   /** MySQL/TiDB-shaped rendering of one column for the CRC-compat lane —
     * the string CONCAT_WS sees when sync_diff_inspector's checksum SQL

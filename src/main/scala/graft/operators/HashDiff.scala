@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Canonical
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Keyless (multiset) table diff.
@@ -15,17 +15,47 @@ import org.apache.spark.sql.functions._
   * extra fingerprint); no fix-SQL keying is possible, matching the
   * reference's index requirement rationale.
   *
-  * Scale posture: one groupBy(fingerprint) shuffle per side with map-side
-  * partial counts, then an equi-join on the fingerprint — both shuffles
-  * hash-partition on the same key, so AQE coalesces and no re-shuffle
-  * happens for the join. The shuffled key is the 16-byte BINARY md5, not
-  * its 32-char hex rendering (2.5x narrower per row at 100 TB — VERDICT
-  * r03 #8); hex is restored only on the drift-bounded output. Sample
-  * payloads never ride the full-table shuffle: the count pass groups bare
-  * fingerprints, and payloads are re-derived in a second pass that is
-  * semi-join-filtered down to the (drift-bounded) differing fingerprints
-  * first — the same bounded-broadcast posture as TableDiff's bad-chunk
-  * list.
+  * [[summary]] is two-phase, like [[TableDiff]]: phase 1 compares
+  * per-bucket checksums of the typed multiset lane
+  * ([[graft.functions.Canonical.multisetLane]]) and moves no per-row
+  * data; only when buckets differ does phase 2 count fingerprints, and
+  * then only in the flagged buckets. A clean bucket holds, up to the
+  * false-accept bound below, the same rows on both sides, so every
+  * fingerprint's up/down difference lives entirely in flagged buckets.
+  *
+  * Scale posture:
+  *   - Phase 1 groups the union of both sides by bucket with map-side
+  *     partial aggregation: its shuffle is at most 4096 rows per
+  *     map task, whatever the table size, and the driver collects at most
+  *     4096 bucket ids.
+  *   - The lane sums add unsigned 32-bit halves, signed by side, so every
+  *     partial sum stays below 2^32 × (rows of one side in the bucket).
+  *     They are exact, and ANSI `sum` cannot raise ARITHMETIC_OVERFLOW,
+  *     below 2^31 rows per bucket per side — 2^43 rows (~8.8·10^12) per
+  *     side at uniform spread.
+  *   - A clean bucket is accepted on equal row counts plus four equal
+  *     sums of the 32-bit halves of two independently seeded 64-bit
+  *     lanes. The bucket id is the first lane's low 12 bits, so 116 of
+  *     the 128 lane bits are free within a bucket: under a random-oracle
+  *     model of `xxhash64`, a bucket whose rows differ is falsely
+  *     accepted with probability about 2^-116 — below the 2^-35 the
+  *     128-bit md5 keeps for row equality at 10^11 rows, and far below
+  *     the keyed path, which accepts a chunk on its count plus a 48-bit
+  *     sum.
+  *   - The exact fingerprint pass runs directly, without phase 1, when the
+  *     two sides' column types differ (the lane is type-sensitive). It
+  *     runs over every row, without the bucket filter, when more than
+  *     7/8 of the buckets are flagged (see [[summary]]).
+  *   - The exact pass is one union of both sides and one aggregation on
+  *     the fingerprint: a single shuffle with map-side partial counts.
+  *     The shuffled key is the 16-byte BINARY md5, not its 32-char hex
+  *     rendering (2.5x narrower per row at 100 TB — VERDICT r03 #8); hex
+  *     is restored only on the drift-bounded output.
+  *   - Sample payloads never ride the full-table shuffle: [[diff]]'s count
+  *     pass groups bare fingerprints, and payloads are re-derived in a
+  *     second pass that is semi-join-filtered down to the (drift-bounded)
+  *     differing fingerprints first — the same bounded-broadcast posture
+  *     as TableDiff's bad-chunk list.
   *
   * Multiset membership is decided on the FULL 128-bit md5 fingerprint
   * (collision discipline, [[graft.functions.Canonical]]) — this keyless
@@ -34,19 +64,35 @@ import org.apache.spark.sql.functions._
   */
 object HashDiff {
 
+  /** Phase-1 bucket count: bounds the phase-1 shuffle per map task and
+    * the driver's collect of flagged bucket ids. */
+  private val Buckets = 4096L
+  private val LaneSeeds = Seq(0x6c616e31L, 0x6c616e32L)
+
   private def fpCols(df: DataFrame) =
     df.schema.fields.toSeq.map(f => (col(f.name), f.dataType))
 
-  /** (fp BINARY(16), count) for one side — the narrow count pass. */
-  private def counted(df: DataFrame, cnt: String): DataFrame =
-    df.select(unhex(Canonical.fingerprint(fpCols(df))).as("fp"))
-      .groupBy("fp").agg(count(lit(1)).as(cnt))
+  private def lane(df: DataFrame, seed: Long): Column =
+    Canonical.multisetLane(fpCols(df), seed)
 
-  private def joined(up: DataFrame, down: DataFrame): DataFrame =
-    counted(up, "up_cnt")
-      .join(counted(down, "down_cnt"), Seq("fp"), "full_outer")
-      .withColumn("up_cnt", coalesce(col("up_cnt"), lit(0L)))
-      .withColumn("down_cnt", coalesce(col("down_cnt"), lit(0L)))
+  /** A row's bucket: the low 12 bits of its first lane. */
+  private def bucketOf(lane0: Column): Column = pmod(lane0, lit(Buckets))
+
+  /** Both sides' projections in one relation, tagged `side` = 1 (up) or
+    * -1 (down). */
+  private def sides(up: DataFrame, down: DataFrame)(
+      cols: DataFrame => Seq[Column]): DataFrame =
+    up.select(cols(up) :+ lit(1L).as("side"): _*)
+      .unionByName(down.select(cols(down) :+ lit(-1L).as("side"): _*))
+
+  /** (fp BINARY(16), up_cnt, down_cnt): one aggregation on the
+    * fingerprint over the union of both sides. */
+  private def counts(up: DataFrame, down: DataFrame): DataFrame =
+    sides(up, down)(df =>
+      Seq(unhex(Canonical.fingerprint(fpCols(df))).as("fp")))
+      .groupBy("fp").agg(
+        count_if(col("side") > 0).as("up_cnt"),
+        count_if(col("side") < 0).as("down_cnt"))
 
   /** Multiset diff of two homologous tables: rows whose fingerprint
     * multiplicity differs. Output: row_fp (lowercase hex), diff_kind,
@@ -54,7 +100,7 @@ object HashDiff {
     * whichever side has the row.
     */
   def diff(up: DataFrame, down: DataFrame): DataFrame = {
-    val diffs = joined(up, down).filter(col("up_cnt") =!= col("down_cnt"))
+    val diffs = counts(up, down).filter(col("up_cnt") =!= col("down_cnt"))
 
     // Payload pass: re-derive the serialized row ONLY for fingerprints
     // already known to differ. A forced broadcast() of that set would be
@@ -64,8 +110,8 @@ object HashDiff {
     // guard is free: the fp set sits at a shuffle-stage boundary, so
     // AQE's runtime size check converts the semi-join to broadcast-hash
     // only when the materialized stage is actually small, and keeps the
-    // shuffled semi-join (on fp — the key both groupBys already
-    // partition on) when it is not. No driver-side count, no extra pass,
+    // shuffled semi-join (on fp — the key the count pass already
+    // partitions on) when it is not. No driver-side count, no extra pass,
     // and the decision is bytes-based rather than a guessed row cap.
     val fps = diffs.select("fp")
     // Rows with equal fingerprints serialize identically, so one min()
@@ -85,13 +131,63 @@ object HashDiff {
         col("diff_kind"), col("up_cnt"), col("down_cnt"), col("vals"))
   }
 
-  /** One-pass summary (both row counts + differing-fingerprint tally) for
-    * the report stage — avoids re-running the diff per verdict/count.
+  /** Both row counts + differing-fingerprint tally for the report stage,
+    * one row (upcount, downcount, bad_fingerprints).
+    *
+    * Eager: phase 1 runs here as one job and returns a local one-row
+    * result when every bucket matches. Otherwise the returned relation is
+    * the exact count over the flagged buckets' rows. The bucket filter
+    * re-hashes every row: on lineitem sf1 (4 cores) the filtered pass over
+    * 4% of the buckets took about 2.5 s against about 13 s for the
+    * unfiltered one, so the filter stays on while at least 1/8 of the
+    * buckets are clean and is dropped when it would keep nearly every row.
     */
-  def summary(up: DataFrame, down: DataFrame): DataFrame =
-    joined(up, down).agg(
-      sum(col("up_cnt")).as("upcount"),
-      sum(col("down_cnt")).as("downcount"),
-      sum(when(col("up_cnt") =!= col("down_cnt"), 1L).otherwise(0L))
-        .as("bad_fingerprints"))
+  def summary(up: DataFrame, down: DataFrame): DataFrame = {
+    def tally(c: DataFrame, upN: Column, downN: Column): DataFrame =
+      c.agg(upN.as("upcount"), downN.as("downcount"),
+        count_if(col("up_cnt") =!= col("down_cnt")).as("bad_fingerprints"))
+
+    if (up.schema.map(_.dataType) != down.schema.map(_.dataType))
+      tally(counts(up, down), coalesce(sum(col("up_cnt")), lit(0L)),
+        coalesce(sum(col("down_cnt")), lit(0L)))
+    else {
+      val (upN, downN, flagged) = bucketChecksums(up, down)
+      if (flagged.isEmpty) {
+        val spark = up.sparkSession
+        import spark.implicits._
+        Seq((upN, downN, 0L)).toDF("upcount", "downcount", "bad_fingerprints")
+      } else {
+        // phase 2: a clean bucket holds the same rows on both sides, so
+        // dropping it leaves every fingerprint's up/down difference intact
+        def keep(df: DataFrame): DataFrame =
+          if (flagged.size * 8 > Buckets * 7) df
+          else df.filter(bucketOf(lane(df, LaneSeeds.head)).isin(flagged: _*))
+        tally(counts(keep(up), keep(down)), lit(upN), lit(downN))
+      }
+    }
+  }
+
+  /** Phase 1, one job: (up rows, down rows, ids of the buckets whose row
+    * count or lane sums differ). Per bucket it sums, signed by side, the
+    * row count and the unsigned 32-bit halves of two seeded lanes; a
+    * bucket is clean when all five sums are 0.
+    */
+  private def bucketChecksums(up: DataFrame, down: DataFrame)
+      : (Long, Long, Seq[Long]) = {
+    val hs = LaneSeeds.indices.map(i => col(s"h$i"))
+    val terms = lit(1L) +: hs.flatMap(h =>
+      Seq(h.bitwiseAND(lit(0xffffffffL)), shiftrightunsigned(h, 32)))
+    val perBucket = sides(up, down)(df =>
+      LaneSeeds.zipWithIndex.map { case (seed, i) => lane(df, seed).as(s"h$i") })
+      .groupBy(bucketOf(hs.head).as("bucket"))
+      .agg(count_if(col("side") > 0).as("up_rows"),
+        terms.zipWithIndex.map { case (t, i) =>
+          sum(t * col("side")).as(s"d$i") }: _*)
+    val dirty = terms.indices.map(i => col(s"d$i") =!= 0L).reduce(_ || _)
+    val r = perBucket.agg(
+      coalesce(sum(col("up_rows")), lit(0L)),
+      coalesce(sum(col("d0")), lit(0L)),
+      collect_list(when(dirty, col("bucket")))).head()
+    (r.getLong(0), r.getLong(0) - r.getLong(1), r.getSeq[Long](2))
+  }
 }

@@ -96,9 +96,9 @@ object CoreQueries {
     * ONE scan — the multiset twin of [[ordersSummaryFused]]: both lanes'
     * fingerprints emit per row (the full 128-bit lane, HashDiff's
     * collision discipline), the unmutated majority reuses the upstream
-    * md5, and the merged per-fingerprint counts aggregate to exactly the
-    * full-outer joined summary (a group's absent side is `cnt = 0`, the
-    * join's coalesced NULL).
+    * md5, and the merged per-fingerprint counts aggregate to exactly
+    * HashDiff's union-aggregated count relation (a side absent from a
+    * group counts 0).
     */
   private[graft] def lineitemSummaryFused(li: DataFrame): DataFrame = {
     val k = col("l_orderkey")

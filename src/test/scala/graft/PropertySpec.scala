@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.Canonical
 import graft.operators._
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -63,6 +64,51 @@ class PropertySpec extends SparkSpec {
       val t = table(n)
       assert(TableDiff.rowDiff(t, t, spec).isEmpty)
       assert(HashDiff.diff(t, t).isEmpty)
+    }
+  }
+
+  test("keyless summary equals a one-pass multiset reference under random drift") {
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id"),
+      when(col("id") % 13 === 0, lit(null))
+        .otherwise(concat(lit("row-"), col("id"))).as("payload"),
+      ((col("id") % 97).cast("double") / 4).as("amount"))
+    def fpCounts(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.select(Canonical.fingerprint(
+        df.schema.fields.toSeq.map(f => (col(f.name), f.dataType))))
+        .as[String].collect().groupBy(identity).view.mapValues(_.length.toLong).toMap
+    // (upcount, downcount, #fingerprints whose multiplicity differs)
+    def reference(up: org.apache.spark.sql.DataFrame,
+                  down: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
+      val (u, d) = (fpCounts(up), fpCounts(down))
+      (u.values.sum, d.values.sum, (u.keySet ++ d.keySet)
+        .count(k => u.getOrElse(k, 0L) != d.getOrElse(k, 0L)).toLong)
+    }
+    def ids(n: Int, k: Int) = Gen.containerOfN[Set, Long](k, Gen.choose(0L, n - 1L))
+    // regimes: zero drift, a few buckets, about half of the buckets
+    // (phase 2 filters to them), every bucket (phase 2 keeps every row)
+    val regimes: Seq[(Int, Int, Boolean)] = Seq(
+      (3000, 0, false), (3000, 4, false), (12000, 600, false), (12000, 40, true))
+    regimes.zipWithIndex.foreach { case ((n, k, mutateAll), i) =>
+      val drift = for {
+        missing <- ids(n, k); extra <- Gen.choose(0, k)
+        mutated <- ids(n, k); dups <- ids(n, k)
+      } yield (missing, extra, mutated, dups)
+      samples(drift, 2).zipWithIndex.foreach { case ((missing, extra, mutated, dups), j) =>
+        val up = rows(0, n).orderBy(rand(seed = i * 10 + j))
+        val down = rows(0, n)
+          .filter(!col("id").isin(missing.toSeq: _*))
+          .withColumn("amount",
+            when(lit(mutateAll) || col("id").isin(mutated.toSeq: _*), col("amount") + 1)
+              .otherwise(col("amount")))
+          .unionByName(rows(0, n).filter(col("id").isin(dups.toSeq: _*)))
+          .unionByName(rows(n, n + extra))
+        val r = HashDiff.summary(up, down).collect()(0)
+        val got = (r.getLong(0), r.getLong(1), r.getLong(2))
+        val want = reference(up, down)
+        assert(got == want, s"n=$n missing=$missing extra=$extra mutated=$mutated " +
+          s"dups=$dups mutateAll=$mutateAll")
+        if (k == 0) assert(want._3 == 0L)
+      }
     }
   }
 

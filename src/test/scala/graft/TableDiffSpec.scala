@@ -1,7 +1,13 @@
 package graft
 
 import graft.operators.{HashDiff, Perturb, TableDiff}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class TableDiffSpec extends SparkSpec {
 
@@ -126,5 +132,85 @@ class TableDiffSpec extends SparkSpec {
     val half = spec.copy(range = "o_orderkey % 2 = 0")
     val diff = TableDiff.rowDiff(orders, down, half)
     assert(diff.filter(col("o_orderkey") % 2 === 1).isEmpty)
+  }
+
+  private def keyless(up: DataFrame, down: DataFrame): (Long, Long, Long) = {
+    val r = HashDiff.summary(up, down).collect()(0)
+    (r.getLong(0), r.getLong(1), r.getLong(2))
+  }
+
+  /** Jobs started, and (input rows, shuffle records written) per
+    * shuffle-map task, while it listens. */
+  private class Recorder extends SparkListener {
+    val jobs = new AtomicInteger
+    val mapTasks = new ConcurrentLinkedQueue[(Long, Long)]
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (e.taskType == "ShuffleMapTask" && e.taskMetrics != null)
+        mapTasks.add((e.taskMetrics.inputMetrics.recordsRead,
+          e.taskMetrics.shuffleWriteMetrics.recordsWritten))
+  }
+  private def recorded[A](f: => A): (A, Recorder) = {
+    val sc = spark.sparkContext
+    val rec = new Recorder
+    ListenerDrain(sc)
+    sc.addSparkListener(rec)
+    try { val a = f; ListenerDrain(sc); (a, rec) }
+    finally sc.removeSparkListener(rec)
+  }
+
+  test("keyless summary: null placement between two bigint columns is a diff") {
+    // Spark's hash skips nulls, so (NULL, 5) and (5, NULL) hash alike
+    // unless each column enters the lane with its null flag
+    val up = spark.sql("SELECT CAST(NULL AS BIGINT) AS a, 5L AS b")
+    val down = spark.sql("SELECT 5L AS a, CAST(NULL AS BIGINT) AS b")
+    assert(keyless(up, down) == ((1L, 1L, 2L)))
+  }
+
+  test("keyless summary: nested-null placement in an array column is a diff") {
+    val up = spark.sql("SELECT 1 AS id, array(CAST(NULL AS INT), 1) AS xs")
+    val down = spark.sql("SELECT 1 AS id, array(1, CAST(NULL AS INT)) AS xs")
+    assert(keyless(up, down) == ((1L, 1L, 2L)))
+  }
+
+  test("keyless summary: canonical-equal, typed-different doubles are no diff") {
+    // 10.001 and 10.0 differ in the typed lane (their bucket flags) but
+    // share the canonical 2dp serial, so the exact pass clears them
+    val up = spark.sql("SELECT 7L AS id, 10.001D AS x UNION ALL SELECT 8L, 2.5D")
+    val down = spark.sql("SELECT 7L AS id, 10.0D AS x UNION ALL SELECT 8L, 2.5D")
+    assert(keyless(up, down) == ((2L, 2L, 0L)))
+    assert(HashDiff.diff(up, down).isEmpty)
+  }
+
+  test("keyless summary: int-vs-bigint sides take the exact path") {
+    val n = orders.count()
+    val asInt = orders.select(col("o_orderkey").cast("int").as("k"), col("o_totalprice"))
+    val asLong = orders.select(col("o_orderkey").cast("bigint").as("k"), col("o_totalprice"))
+    // the typed lane cannot compare an int with a bigint, so no phase-1
+    // job runs inside summary(); the exact pass is the returned relation
+    val (_, exact) = recorded(HashDiff.summary(asInt, asLong))
+    assert(exact.jobs.get == 0)
+    assert(keyless(asInt, asLong) == ((n, n, 0L)))
+    assert(keyless(asInt, asLong.filter(col("k") =!= 1L)) == ((n, n - 1, 1L)))
+    // matching types: phase 1 runs eagerly
+    val (_, phase1) = recorded(HashDiff.summary(asLong, asLong))
+    assert(phase1.jobs.get > 0)
+  }
+
+  test("in-sync keyless summary shuffles at most 4096 records per map task") {
+    val dir = java.nio.file.Files.createTempDirectory("hashdiff_insync_").toString
+    val t = spark.range(0, 60000, 1, 2).select(col("id"),
+      concat(lit("row-"), col("id")).as("payload"),
+      ((col("id") % 97).cast("double") / 4).as("amount"))
+    t.write.parquet(s"$dir/up")
+    t.write.parquet(s"$dir/down") // a separate byte copy, as a replica is
+    val (s, rec) = recorded(keyless(
+      spark.read.parquet(s"$dir/up"), spark.read.parquet(s"$dir/down")))
+    assert(s == ((60000L, 60000L, 0L)))
+    val tasks = rec.mapTasks.asScala.toSeq
+    assert(tasks.nonEmpty)
+    assert(tasks.map(_._2).max <= 4096, s"map tasks (rows in, records out): $tasks")
+    // the bound is not vacuous: map tasks read far more rows than that
+    assert(tasks.map(_._1).max > 4096)
   }
 }
