@@ -340,12 +340,13 @@ object Cli {
             // and retrain deliberately FAIL on) are different findings
             // and must not share a line or an exit code (ADVICE r17)
             scala.util.Try(
-              operators.ProductQuant.loadQuantizersMeta(spark, resolved))
+              operators.ProductQuant.loadBooks(spark, resolved))
             match {
-              case scala.util.Success(((coarse, bySub), meta)) =>
-                println(s"books: present (scheme ${meta.scheme}, " +
-                  s"coarse ${coarse.length}, fine ${bySub.size} sub x " +
-                  s"${bySub.headOption.map(_._2.length).getOrElse(0)})")
+              case scala.util.Success(books) =>
+                println(s"books: present (scheme ${books.scheme.name}, " +
+                  s"coarse ${books.coarse.length}, fine ${books.fine.size} " +
+                  s"sub x ${books.fine.headOption.map(_._2.length)
+                    .getOrElse(0)})")
               case scala.util.Failure(_: java.util.NoSuchElementException) =>
                 println("books: ABSENT — store probes need " +
                   "explicitly-held quantizers; republish with books")
@@ -782,12 +783,13 @@ object Cli {
         val booksJson =
           if (store.isEmpty) "null"
           else scala.util.Try(
-            operators.ProductQuant.loadQuantizersMeta(spark, resolved))
+            operators.ProductQuant.loadBooks(spark, resolved))
           match {
-            case scala.util.Success(((coarse, bySub), meta)) =>
-              s"""{"status":"present","scheme":${js(meta.scheme)},""" +
-                s""""coarse":${coarse.length},"subs":${bySub.size},""" +
-                s""""ks":${meta.ks},"dim":${meta.dim}}"""
+            case scala.util.Success(books) =>
+              s"""{"status":"present","scheme":${js(books.scheme.name)},""" +
+                s""""coarse":${books.coarse.length},""" +
+                s""""subs":${books.fine.size},""" +
+                s""""ks":${books.meta.ks},"dim":${books.meta.dim}}"""
             case scala.util.Failure(_: java.util.NoSuchElementException) =>
               """{"status":"absent"}"""
             case scala.util.Failure(e) =>

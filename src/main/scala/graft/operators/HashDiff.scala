@@ -106,7 +106,7 @@ object HashDiff {
     // already known to differ. A forced broadcast() of that set would be
     // right in the common drift-bounded case but corpus-sized under
     // pervasive drift (wrong table pairing / mass mutation) → driver OOM,
-    // the exact case TableDiff guards with maxBroadcastChunks. Here the
+    // the exact case TableDiff guards with MaxBroadcastChunks. Here the
     // guard is free: the fp set sits at a shuffle-stage boundary, so
     // AQE's runtime size check converts the semi-join to broadcast-hash
     // only when the materialized stage is actually small, and keeps the

@@ -92,6 +92,86 @@ object ProductQuant {
   def adcShortlist(corpusCount: Long): Long =
     math.max(AdcShortlistFloor.toLong, corpusCount / 20)
 
+  /** An IVFADC index's quantizer SCHEME — how its code words were
+    * produced, and therefore how every verb must read them. Flat and
+    * residual share the exact (coarse, fine-books) shape, but residual
+    * codes quantize x̂ − ĉ, RELATIVE to the coarse centroid they were
+    * encoded against (Jégou et al. 2011 §V); OPQ codes are flat codes of
+    * vectors first rotated by the stored Householder reflections (Ge et
+    * al. 2013). The verbs branch on the scheme in exactly five places:
+    * fine-book training, encoding, the query relation and its score,
+    * the input rotation, and retrain's re-list vs re-encode.
+    */
+  sealed trait Scheme { def name: String }
+
+  object Scheme {
+    case object Flat extends Scheme { val name = "flat" }
+    case object Residual extends Scheme { val name = "residual" }
+
+    /** `rotation`: the ordered Householder reflections, each
+      * (w in exact micro-longs, w'w) — applied in order by
+      * [[opqRotateK]]. OPQ codes without their rotation are
+      * uninterpretable, so an empty list is unrepresentable.
+      */
+    final case class Opq(rotation: Seq[(Seq[Long], Long)]) extends Scheme {
+      require(rotation.nonEmpty, "Scheme.Opq: empty rotation list")
+      val name = "opq"
+    }
+  }
+
+  /** A generation's frozen quantizers — coarse centroids and
+    * per-subspace fine codebooks — together with the scheme its codes
+    * were encoded under: bounded driver state by the codebook contract,
+    * and everything a probe needs besides the code relation.
+    */
+  final case class Books(scheme: Scheme,
+                         coarse: Seq[(Long, Array[Double])],
+                         fine: Map[Int, Seq[(Long, Array[Double])]]) {
+    /** The geometry [[writeQuantizers]] records and [[loadBooks]]
+      * cross-checks — derived from the books themselves, so the meta
+      * row can never silently disagree with what it describes.
+      */
+    def meta: IndexMeta =
+      IndexMeta(scheme, coarse.length, fine.size,
+        fine.valuesIterator.map(_.length).maxOption.getOrElse(0),
+        coarse.headOption.map(_._2.length).getOrElse(0))
+  }
+
+  /** The scheme's INPUT step: OPQ rotates the corpus into the stored
+    * rotation's space before anything else reads it; the other schemes
+    * read it as given.
+    */
+  private def inputOf(scheme: Scheme, df: DataFrame, d: Int): DataFrame =
+    scheme match {
+      case Scheme.Opq(rots) => opqRotateK(df, rots, d)
+      case _                => df
+    }
+
+  /** The corpus-with-norm relation every IVFADC verb scans:
+    * (vec_id, embedding, nrm). `spread` first — a single-file fixture
+    * scan arrives as ONE partition and would serialize the per-row
+    * codebook scoring on one core (Tables.spread scaladoc; a no-op at
+    * real scale) — except for a DF inside a streaming plan's lineage,
+    * which must not round-trip through `.rdd`. Null embeddings are
+    * EXCLUDED, not sentinel-assigned: the coarseAssignCol coalesce(-1)
+    * is only a nullability guard for the optimizer and must never fire
+    * — a null row mapped to list -1 would silently join into a phantom
+    * inverted list (and count in ivfListBalance) instead of being
+    * dropped. The norm rides as a scalar: each subspace DOT divides by
+    * it (dot(x,c)/‖x‖ == dot(x/‖x‖,c)) — see the scoreStructs `div`
+    * note for why element-wise normalization explodes the plan.
+    * Registers the kernels the scan calls on the CORPUS's session, so
+    * a fresh probe-only session plans normN and the encoders too.
+    */
+  private def normed(df: DataFrame, d: Int, spread: Boolean): DataFrame = {
+    graft.functions.PqKernels.register(df.sparkSession)
+    graft.functions.LshKernels.register(df.sparkSession)
+    val base = if (spread) graft.Tables.spread(df) else df
+    base.filter(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding"),
+        Similarity.normN(col("embedding"), d).as("nrm"))
+  }
+
   /** md5-ordered deterministic training sample; the seed vectors are its
     * first `ks` rows (mirror of Similarity.centroidSeed's ordering —
     * duplicated because that one is private and this codebook seeds
@@ -431,28 +511,12 @@ object ProductQuant {
   /** Shared ADC fine-quantizer parts — ONE definition feeding the flat
     * ADC face ([[adcTopK]]), the IVF-composed face ([[ivfadcTopK]]), and
     * through them both recall gates: (corpus-with-norm relation, the
-    * collected normalized-space codebook). The norm rides as a scalar —
-    * normalized-space scoring WITHOUT materializing normalized arrays:
-    * each subspace DOT divides by it (dot(x,c)/‖x‖ == dot(x/‖x‖,c)) —
-    * see the scoreStructs `div` note for why element-wise normalization
-    * explodes the plan.
+    * collected normalized-space codebook) — normalized-space scoring
+    * WITHOUT materializing normalized arrays ([[normed]]).
     */
   private def adcParts(embeddings: DataFrame, d: Int)
       : (DataFrame, Map[Int, Seq[(Long, Array[Double])]]) = {
-    // spread BEFORE the encode projection: a single-file fixture scan
-    // arrives as ONE partition and would serialize the per-row
-    // HOF-interpreted codebook scoring on one core (Tables.spread
-    // scaladoc — a no-op at real scale)
-    graft.functions.PqKernels.register(embeddings.sparkSession)
-    // Null embeddings are EXCLUDED here, not sentinel-assigned: the
-    // coarseAssignCol coalesce(-1) below exists only as a nullability
-    // guard for the optimizer, and must never fire — a null row mapped
-    // to list -1 would silently join into a phantom inverted list (and
-    // count in ivfListBalance) instead of being dropped.
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
+    val embN = normed(embeddings, d, spread = true)
     val bySub = collectCodebook(
       codebook(embeddings, d, AdcM, AdcKs, AdcSampleN, l2Normalize = true))
     (embN, bySub)
@@ -551,55 +615,158 @@ object ProductQuant {
     adcRerank(shortlistOf(scored, embeddings), embeddings, d, k)
   }
 
-  /** IVFADC stage 1 — the pre-aggregation (probed-list-only) scoring
-    * relation, exposed package-private so the spec can assert the scan
-    * bound: its row count is Σ_q |probed lists of q|·AdcM, strictly
-    * below the flat ADC stage-1's |corpus|·AdcM·|queries|.
+  /** Train BOTH frozen quantizers of `scheme` (coarse centroids + fine
+    * subspace codebooks) on `embeddings` — the bounded driver state an
+    * index derives from its training corpus. ONE md5-prefix TakeOrdered
+    * serves both (guide §1.2 — remove redundant passes): the coarse
+    * sample is the first nCoarse rows of the SAME (h, vec_id) total order
+    * whose first AdcSampleN rows train the fine books, so collecting
+    * max(...) rows once and slicing is bit-identical to two separate
+    * corpus collects — at 100 TB one full-corpus TakeOrdered pass instead
+    * of two. Both books live in L2-normalized space (normalized
+    * driver-side at collect time), so a norm-divided dot ranks by round6
+    * COSINE — the mirror of the oracle's ccent/csim CTEs.
+    *
+    * Per scheme: the residual fine books train on x̂ − ĉ — each sample
+    * vector is assigned to its coarse cell with the engine's own
+    * round6-cosine rule (replicated bit-for-bit with
+    * [[Similarity.round6]]) and residualized before the shared Lloyd-1
+    * trainer runs on the ≤160-row local relation directly; OPQ trains
+    * in the rotated space ([[inputOf]]) — the books must live where the
+    * codes do (Ge §4's fixed-rotation step).
     */
-  private[graft] def ivfadcStage1(embeddings: DataFrame,
-                                      queryPred: Column, nCoarse: Int,
-                                      nProbe: Int,
-                                      dim: Option[Int] = None): DataFrame = {
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val subLen = d / AdcM
-    // Corpus-with-norm relation ([[adcParts]]'s shape, null embeddings
-    // excluded — see its scaladoc) + BOTH frozen quantizers off ONE
-    // md5-prefix collect: the coarse quantizer uses the same seed rule
-    // as the fine codebook's training sample (L2-normalized driver-side
-    // so the norm-divided dot ranks by round6 COSINE — mirror of the
-    // oracle's ccent/csim CTEs), so [[ivfadcQuantizers]] slices both
-    // from one corpus TakeOrdered instead of paying it twice.
-    graft.functions.PqKernels.register(embeddings.sparkSession)
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    val (coarse, bySub) = ivfadcQuantizers(embeddings, nCoarse, d)
-    // ONE corpus scan emits the whole composed index row: (vec_id, ccid,
-    // sub, code) — the inverted-list tag and all AdcM fine codes
-    // together. At rest this relation is what you'd write PARTITIONED BY
-    // ccid, making stage 1 partition-pruned to the probed lists; here
-    // the probe filter is the broadcast hash join below.
-    // ccid rides a value-preserving coalesce (argmax is never null) so
-    // the downstream ccid equi-join cannot INFER an IsNotNull filter:
-    // inferred on a nullable expression column, the optimizer pushes it
-    // below the Generate REWRITTEN to the full 16-centroid argmax tree
-    // and re-evaluates it per corpus row in an interpreted Filter
-    // (measured ~2x on this face before the guard).
-    val enc = explodeVia(embN,
-      Seq(col("vec_id"),
-        coarseAssignCol(col("embedding"), col("nrm"), coarse).as("ccid")),
-      allCodesCol(col("embedding"), bySub, subLen, Some(col("nrm"))),
-      Seq("sub", "code"))
-    // Query relation: nProbe coarse ids × the AdcM·AdcKs LUT, joined
-    // driver-free on q_id — |queries|·nProbe·AdcM·AdcKs rows, corpus-
-    // independent, broadcastable at any scale.
-    val qprobe = embN.filter(queryPred).select(col("vec_id").as("q_id"),
-      explode(assignTopCol(col("embedding"), coarse, 0, 0, d, nProbe,
-        Some(col("nrm")))).as("ccid"))
-    val lut = adcLut(embN, queryPred, bySub, subLen)
-    val qrel = qprobe.join(lut, "q_id")
-    enc.join(broadcast(qrel), Seq("ccid", "sub", "code"))
+  def trainBooks(embeddings: DataFrame, scheme: Scheme, nCoarse: Int,
+                 d: Int): Books = {
+    val samp = collectSample(inputOf(scheme, embeddings, d),
+      math.max(AdcSampleN, nCoarse), l2Normalize = true)
+    val coarse = samp.take(nCoarse)
+    val fineSample = scheme match {
+      case Scheme.Residual =>
+        val cmap: Map[Long, Array[Double]] = coarse.toMap
+        samp.take(AdcSampleN).map { case (id, v) =>
+          val cid = coarse.map { case (ccid, cv) =>
+            var s = 0.0
+            var i = 0
+            while (i < v.length) { s += v(i) * cv(i); i += 1 }
+            (Similarity.round6(s), ccid)
+          }.maxBy { case (sd, ccid) => (sd, -ccid) }._2
+          val cv = cmap(cid)
+          (id, v.indices.map(i => v(i) - cv(i)).toArray)
+        }
+      case _ => samp.take(AdcSampleN)
+    }
+    Books(scheme, coarse, collectCodebook(codebookOfSample(
+      embeddings.sparkSession, fineSample, d, AdcM, AdcKs)))
+  }
+
+  /** The composed (vec_id, ccid, sub, code) index rows of a [[normed]]
+    * relation under frozen `books` — ONE scan emits the inverted-list tag
+    * and all AdcM fine codes together, both through the native kernels
+    * ([[coarseAssignCol]], [[allCodesCol]]). ccid rides a
+    * value-preserving coalesce (argmax is never null) so a downstream
+    * ccid equi-join cannot INFER an IsNotNull filter: inferred on a
+    * nullable expression column, the optimizer pushes it below the
+    * Generate rewritten to the full 16-centroid argmax tree and
+    * re-evaluates it per corpus row in an interpreted Filter (measured
+    * ~2x before the guard). Residual codes come from `pq_encode_res`,
+    * which resolves each row's coarse centroid by ccid from foldable
+    * literals — they are RELATIVE to that centroid, which is why a
+    * residual generation re-encodes on retrain ([[retrainStore]]).
+    */
+  private def encodeN(embN: DataFrame, books: Books, d: Int): DataFrame = {
+    val ccid = coarseAssignCol(col("embedding"), col("nrm"), books.coarse)
+    books.scheme match {
+      case Scheme.Residual =>
+        val (cvsF, cidsF) = bookLits(books.fine)
+        explodeVia(embN.select(col("vec_id"), col("embedding"), col("nrm"),
+            ccid.as("ccid")),
+          Seq(col("vec_id"), col("ccid")),
+          call_function("pq_encode_res", col("embedding"), col("nrm"),
+            col("ccid"), typedLit(books.coarse.map(_._1)),
+            typedLit(books.coarse.map(_._2.toSeq)), cvsF, cidsF),
+          Seq("sub", "code"))
+      case _ =>
+        explodeVia(embN, Seq(col("vec_id"), ccid.as("ccid")),
+          allCodesCol(col("embedding"), books.fine, d / AdcM,
+            Some(col("nrm"))),
+          Seq("sub", "code"))
+    }
+  }
+
+  /** The (vec_id, ccid, sub, code) code relation for `df` under FROZEN
+    * `books` — the pure per-row encode the at-rest build, the
+    * incremental ingest, retrain's re-encode and the streaming
+    * micro-batch ingest all share (a code is a pure function of the
+    * frozen books and, for OPQ, the frozen rotation — which is WHY
+    * append == rebuild). `spread` must be false for a DF inside a
+    * streaming plan's lineage ([[normed]]).
+    */
+  def codesWith(df: DataFrame, books: Books, d: Int,
+                spread: Boolean = true): DataFrame =
+    encodeN(normed(inputOf(books.scheme, df, d), d, spread), books, d)
+
+  /** A probe's query relation under `books`, as (probe half, joined
+    * relation): the query's `nProbe` best coarse cells (round6 cosine,
+    * centroid-id tie-break) × the AdcM·AdcKs fine LUT, joined driver-free
+    * on q_id — |queries|·nProbe·AdcM·AdcKs rows, corpus-independent,
+    * broadcastable at any scale. The persisted probe collects its pruned
+    * list ids from the CHEAP probe half alone, never through the joined
+    * relation, which embeds the LUT aggregation and would run that job
+    * twice. Flat (and OPQ) rows are (q_id, ccid, sub, code, sd6); a
+    * residual probe also carries each probed cell's coarse dot in
+    * micro-units, (q_id, ccid, sd6c, sub, code, sd6f), because its
+    * score reconstructs as dot(q̂, ĉ) + Σ_sub dot(q̂_sub, f_code)
+    * ([[scoreOf]]).
+    */
+  private def queryRel(embN: DataFrame, queryPred: Column, books: Books,
+                       d: Int, nProbe: Int): (DataFrame, DataFrame) = {
+    val top = slice(reverse(array_sort(scoreStructs(col("embedding"),
+      books.coarse, 0, 0, d, Some(col("nrm"))))), 1, nProbe)
+    val queries = embN.filter(queryPred)
+    val lut = adcLut(embN, queryPred, books.fine, d / AdcM)
+    books.scheme match {
+      case Scheme.Residual =>
+        val qprobe = queries.select(col("vec_id").as("q_id"),
+            explode(transform(top, x =>
+              struct((-x.getField("ncid")).as("ccid"),
+                round(x.getField("sd") * lit(1000000)).cast("bigint")
+                  .as("sd6c")))).as("p"))
+          .select(col("q_id"), col("p.ccid").as("ccid"),
+            col("p.sd6c").as("sd6c"))
+        (qprobe, qprobe.join(lut.withColumnRenamed("sd6", "sd6f"), "q_id"))
+      case _ =>
+        val qprobe = queries.select(col("vec_id").as("q_id"),
+          explode(transform(top, x => -x.getField("ncid"))).as("ccid"))
+        (qprobe, qprobe.join(lut, "q_id"))
+    }
+  }
+
+  /** A candidate's approximate score from its matched [[queryRel]] rows,
+    * exact and order-free in integer micro-units: the sum of its codes'
+    * LUT entries, plus — residual only — the probed cell's coarse dot
+    * (one value per (query, cell), so `min` picks it).
+    */
+  private def scoreOf(scheme: Scheme): Column = scheme match {
+    case Scheme.Residual => min("sd6c") + sum("sd6f")
+    case _               => sum("sd6")
+  }
+
+  /** IVFADC stage 1 — the pre-aggregation (probed-list-only) scoring
+    * relation under frozen `books`, exposed package-private so the spec
+    * can assert the scan bound: its row count is
+    * Σ_q |probed lists of q|·AdcM, strictly below the flat ADC
+    * stage-1's |corpus|·AdcM·|queries|. ONE corpus scan emits the
+    * composed index row ([[encodeN]]); at rest that relation is what
+    * you'd write PARTITIONED BY ccid, making stage 1 partition-pruned to
+    * the probed lists ([[ivfadcProbeIndex]]); here the probe filter is
+    * the broadcast hash join.
+    */
+  private[graft] def ivfadcStage1(embeddings: DataFrame, queryPred: Column,
+                                  books: Books, nProbe: Int,
+                                  d: Int): DataFrame = {
+    val embN = normed(inputOf(books.scheme, embeddings, d), d, spread = true)
+    val (_, qrel) = queryRel(embN, queryPred, books, d, nProbe)
+    encodeN(embN, books, d).join(broadcast(qrel), Seq("ccid", "sub", "code"))
       .filter(col("q_id") =!= col("vec_id"))
   }
 
@@ -612,13 +779,9 @@ object ProductQuant {
     */
   def coarseAssign(embeddings: DataFrame, nCoarse: Int = 16,
                    dim: Option[Int] = None): DataFrame = {
-    graft.functions.PqKernels.register(embeddings.sparkSession)
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
     val coarse = collectSample(embeddings, nCoarse, l2Normalize = true)
-    graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull) // no phantom list -1 (adcParts)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
+    normed(embeddings, d, spread = true)
       .select(col("vec_id"),
         coarseAssignCol(col("embedding"), col("nrm"), coarse).as("ccid"))
   }
@@ -647,14 +810,14 @@ object ProductQuant {
         expr(s"n_vectors * $nCoarse * 1000 div __total").as("skew_permille"))
   }
 
-  /** IVFADC — the composed two-quantizer index (Jégou et al. 2011 §V,
-    * non-residual variant): a COARSE inverted-file quantizer (`nCoarse`
-    * md5-seeded centroids, cosine assignment — the same rule as
-    * [[Similarity.ivfTopK]]) routes the fine ADC code scan to only the
-    * query's `nProbe` probed lists, so stage 1 touches ~nProbe/nCoarse
-    * of the code relation instead of every code row — at 100 TB the
-    * difference between scanning the whole 8 B/vector index per query
-    * batch and a quarter of it. Scoring and rerank are exactly
+  /** IVFADC — the composed two-quantizer index (Jégou et al. 2011 §V)
+    * under `scheme`, trained on `embeddings`: a COARSE inverted-file
+    * quantizer (`nCoarse` md5-seeded centroids, cosine assignment — the
+    * same rule as [[Similarity.ivfTopK]]) routes the fine ADC code scan
+    * to only the query's `nProbe` probed lists, so stage 1 touches
+    * ~nProbe/nCoarse of the code relation instead of every code row — at
+    * 100 TB the difference between scanning the whole 8 B/vector index
+    * per query batch and a quarter of it. Scoring and rerank are exactly
     * [[adcTopK]]'s: integer micro-unit LUT sums, [[adcShortlist]]-rule
     * truncation, exact rounded-cosine rerank.
     *
@@ -669,22 +832,34 @@ object ProductQuant {
     * the query's top cell). The default operating point nProbe=4 takes
     * the 4× scan cut at the fixture-measured 0.55; the knob, not the
     * operator, owns the recall target.
+    *
+    * The RESIDUAL scheme is the full §V encoding: residual codebooks
+    * spend their 16 cells describing the (much smaller) within-cell
+    * spread, so reconstruction distortion drops — MEASURED by
+    * `adc_distortion` at sf0.01: mean |approx − exact| score error
+    * 146,778 micro-units residual vs 186,328 flat (−21%). The fidelity
+    * gain converts to recall once the shortlist is smaller than the
+    * probed candidate pool (true at scale; at fixture scale the
+    * shortlist rule keeps every probed candidate, so recall ties the
+    * flat face at 0.55 and the ledger rows pin the scoring path and the
+    * distortion gap).
     */
   def ivfadcTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-                 nCoarse: Int = 16, nProbe: Int = 4,
+                 scheme: Scheme, nCoarse: Int = 16, nProbe: Int = 4,
                  dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val scored = ivfadcStage1(embeddings, queryPred, nCoarse, nProbe,
-        Some(d))
+    val books = trainBooks(embeddings, scheme, nCoarse, d)
+    val scored = ivfadcStage1(embeddings, queryPred, books, nProbe, d)
       .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum("sd6").as("adc6"))
-    adcRerank(shortlistOf(scored, embeddings), embeddings, d, k)
+      .agg(scoreOf(scheme).as("adc6"))
+    val emb = inputOf(scheme, embeddings, d)
+    adcRerank(shortlistOf(scored, emb), emb, d, k)
   }
 
   /** IVFADC against a PERSISTED list-partitioned index (VERDICT r12
     * #3) — the physical-design loop [[ivfListBalance]]'s scaladoc
     * promises, closed: the composed single-scan index relation
-    * (vec_id, ccid, sub, code) — exactly [[ivfadcStage1]]'s `enc` — is
+    * (vec_id, ccid, sub, code) — exactly [[ivfadcStage1]]'s encode — is
     * written `PARTITIONED BY ccid` (the `events_partition_prune`
     * layout), and the probe phase reads back ONLY the probed lists'
     * partitions: the union of every query's nProbe coarse ids is at
@@ -695,108 +870,53 @@ object ProductQuant {
     * batch and only the probed fraction, with NO recompute of the
     * corpus encode per batch (the at-rest index amortizes it).
     * Scoring, shortlist rule, and exact rerank are [[ivfadcTopK]]'s —
-    * the result is row-identical to the in-memory face (the oracle and
-    * spec both pin this).
+    * the result is row-identical to the in-memory flat face (the oracle
+    * and spec both pin this).
     */
   def ivfadcPartitionedTopK(embeddings: DataFrame, queryPred: Column,
                             k: Int, indexDir: String, nCoarse: Int = 16,
                             nProbe: Int = 4,
                             dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (coarse, bySub) = ivfadcBuildIndex(embeddings, indexDir, nCoarse,
+    val books = ivfadcBuildIndex(embeddings, indexDir, nCoarse, Some(d))
+    ivfadcProbeIndex(embeddings, queryPred, k, indexDir, books, nProbe,
       Some(d))
-    ivfadcProbeIndex(embeddings, queryPred, k, indexDir, coarse, bySub,
-      nProbe, Some(d))
   }
 
   /** [[ivfadcPartitionedTopK]]'s BUILD phase alone (VERDICT r13 #3
     * split the two so each is separately timeable): one corpus scan →
-    * the at-rest ccid-partitioned code relation at `indexDir`. Returns
-    * the frozen quantizers the probe phase needs (coarse centroids +
-    * fine codebooks — bounded driver state by the codebook contract).
+    * the at-rest ccid-partitioned flat code relation at `indexDir`.
+    * Returns the frozen books the probe phase needs (bounded driver
+    * state by the codebook contract).
     */
   def ivfadcBuildIndex(embeddings: DataFrame, indexDir: String,
-                       nCoarse: Int = 16, dim: Option[Int] = None)
-      : (Seq[(Long, Array[Double])], Map[Int, Seq[(Long, Array[Double])]]) = {
+                       nCoarse: Int = 16, dim: Option[Int] = None): Books = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (coarse, bySub) = ivfadcQuantizers(embeddings, nCoarse, d)
-    writeIndex(ivfadcCodesWith(embeddings, coarse, bySub, d), indexDir)
-    (coarse, bySub)
+    val books = trainBooks(embeddings, Scheme.Flat, nCoarse, d)
+    writeIndex(codesWith(embeddings, books, d), indexDir)
+    books
   }
 
-  /** BOTH frozen quantizers (coarse centroids + fine subspace
-    * codebooks) trained on `embeddings` — the bounded driver state an
-    * at-rest index derives from its training corpus.
-    */
-  def ivfadcQuantizers(embeddings: DataFrame, nCoarse: Int, d: Int)
-      : (Seq[(Long, Array[Double])], Map[Int, Seq[(Long, Array[Double])]]) = {
-    // ONE md5-prefix TakeOrdered serves both quantizers (guide §1.2 —
-    // remove redundant passes): the coarse sample is the first nCoarse
-    // rows of the SAME (h, vec_id) total order whose first AdcSampleN
-    // rows train the fine books, so collecting max(...) rows once and
-    // slicing is bit-identical to the two separate corpus collects it
-    // replaces — and at 100 TB it is one full-corpus TakeOrdered pass
-    // instead of two.
-    val samp = collectSample(embeddings, math.max(AdcSampleN, nCoarse),
-      l2Normalize = true)
-    val bySub = collectCodebook(codebookOfSample(embeddings.sparkSession,
-      samp.take(AdcSampleN), d, AdcM, AdcKs))
-    (samp.take(nCoarse), bySub)
-  }
-
-  /** The (vec_id, ccid, sub, code) code relation for `df` under FROZEN
-    * quantizers — the pure per-row encode the at-rest build, the
-    * incremental ingest, and the streaming micro-batch ingest all
-    * share (a code is a pure function of the frozen books, which is
-    * WHY append == rebuild). `spread` must be false for a DF inside a
-    * streaming plan's lineage (Tables.spread round-trips through .rdd);
-    * batch callers spread against the 1-file-fixture serialization.
-    */
-  def ivfadcCodesWith(df: DataFrame, coarse: Seq[(Long, Array[Double])],
-                      bySub: Map[Int, Seq[(Long, Array[Double])]],
-                      d: Int, spread: Boolean = true): DataFrame = {
-    graft.functions.PqKernels.register(df.sparkSession)
-    val subLen = d / AdcM
-    val base = if (spread) graft.Tables.spread(df) else df
-    val embN = base.filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    explodeVia(embN,
-      Seq(col("vec_id"),
-        coarseAssignCol(col("embedding"), col("nrm"), coarse).as("ccid")),
-      allCodesCol(col("embedding"), bySub, subLen, Some(col("nrm"))),
-      Seq("sub", "code"))
-  }
-
-  /** [[ivfadcPartitionedTopK]]'s PROBE phase alone — the steady-state
+  /** Probe a PERSISTED code relation under `books` — the steady-state
     * per-query-batch cost the 100 TB argument cares about (the build
-    * amortizes across batches; this does not): probed-list ids land in
-    * the scan's PartitionFilters so unprobed lists' files never open.
+    * amortizes across batches; this does not): the caller passes RAW
+    * embeddings (an OPQ probe rotates them first, [[inputOf]]),
+    * probed-list ids land in the scan's PartitionFilters so unprobed
+    * lists' files never open, standing deletes (`excludeIds`) leave the
+    * candidate set BEFORE scoring, and the score is [[scoreOf]] over the
+    * read-back codes. The books must be the ones the codes were encoded
+    * under — [[ivfadcProbeStore]] guarantees that by loading them from
+    * the generation's own sidecar.
     */
   def ivfadcProbeIndex(embeddings: DataFrame, queryPred: Column, k: Int,
-                       indexDir: String,
-                       coarse: Seq[(Long, Array[Double])],
-                       bySub: Map[Int, Seq[(Long, Array[Double])]],
-                       nProbe: Int = 4,
+                       indexDir: String, books: Books, nProbe: Int = 4,
                        dim: Option[Int] = None,
                        excludeIds: Option[DataFrame] = None): DataFrame = {
     val spark = embeddings.sparkSession
-    graft.functions.PqKernels.register(spark)
-    // the probe-only entry point (ivfadcProbeStore on a FRESH session)
-    // reaches normN below with no prior face having registered the LSH
-    // kernel family — register what this plan actually calls
-    graft.functions.LshKernels.register(spark)
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val subLen = d / AdcM
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    // same query relation as the in-memory face
-    val qprobe = embN.filter(queryPred).select(col("vec_id").as("q_id"),
-      explode(assignTopCol(col("embedding"), coarse, 0, 0, d, nProbe,
-        Some(col("nrm")))).as("ccid"))
-    val qrel = qprobe.join(adcLut(embN, queryPred, bySub, subLen), "q_id")
+    val emb = inputOf(books.scheme, embeddings, d)
+    val (qprobe, qrel) =
+      queryRel(normed(emb, d, spread = true), queryPred, books, d, nProbe)
     // ≤ nCoarse probed list ids — bounded driver state by construction.
     // The read-back partition column is inference-typed INT (values
     // 0..nCoarse-1), so probe with int literals to keep the In inside
@@ -808,7 +928,7 @@ object ProductQuant {
     // standing deletes (tombstone sidecar) leave the candidate set
     // BEFORE scoring — a deleted vector never reaches the shortlist or
     // the rerank. The broadcast decision belongs to the CALLER (the
-    // store paths apply [[TombstoneBroadcastBytes]] via the hinted
+    // store probe applies [[TombstoneBroadcastBytes]] via the hinted
     // accessor): an unconditional broadcast here would OOM an executor
     // the day a delete-heavy corpus outgrows "deletes ≪ corpus"
     // (VERDICT r16 #2); un-hinted, the anti-join degrades to a shuffle
@@ -819,23 +939,21 @@ object ProductQuant {
       .join(broadcast(qrel), Seq("ccid", "sub", "code"))
       .filter(col("q_id") =!= col("vec_id"))
       .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum("sd6").as("adc6"))
-    adcRerank(shortlistOf(scored, embeddings), embeddings, d, k)
+      .agg(scoreOf(books.scheme).as("adc6"))
+    adcRerank(shortlistOf(scored, emb), emb, d, k)
   }
 
   /** Per-JVM at-rest index cache for [[ivfadcCachedProbeTopK]] /
-    * [[indexLayoutAudit]]: cacheKey → (indexDir, coarse, bySub). The
-    * build inputs are deterministic (md5-prefix samples), so every
-    * build of the same corpus produces the same index — caching changes
-    * WHEN the build cost is paid, never what any probe returns.
+    * [[indexLayoutAudit]]: cacheKey → (indexDir, books). The build
+    * inputs are deterministic (md5-prefix samples), so every build of
+    * the same corpus produces the same index — caching changes WHEN the
+    * build cost is paid, never what any probe returns.
     */
-  private val indexCache = scala.collection.mutable.Map.empty[
-    String,
-    (String, Seq[(Long, Array[Double])], Map[Int, Seq[(Long, Array[Double])]])]
+  private val indexCache =
+    scala.collection.mutable.Map.empty[String, (String, Books)]
 
   private def cachedIndex(embeddings: DataFrame, cacheKey: String,
-                          nCoarse: Int, d: Int)
-      : (String, Seq[(Long, Array[Double])], Map[Int, Seq[(Long, Array[Double])]]) = {
+                          nCoarse: Int, d: Int): (String, Books) = {
     // a corpus fingerprint rides in the key (ADVICE r14): a caller
     // passing a DIFFERENT or filtered corpus under a reused cacheKey
     // must not silently probe the stale index built from another one.
@@ -868,11 +986,10 @@ object ProductQuant {
         // pruneGenerations' retention protects.
         val spark = embeddings.sparkSession
         val base = graft.Scratch.dir("ivfadc_store_")
-        val (coarse, bySub) = ivfadcQuantizers(embeddings, nCoarse, d)
-        publishIndex(spark, base,
-          ivfadcCodesWith(embeddings, coarse, bySub, d),
-          quantizers = Some((coarse, bySub)))
-        (currentIndexDir(spark, base), coarse, bySub)
+        val books = trainBooks(embeddings, Scheme.Flat, nCoarse, d)
+        publishIndex(spark, base, codesWith(embeddings, books, d),
+          books = Some(books))
+        (currentIndexDir(spark, base), books)
       })
     }
   }
@@ -897,9 +1014,8 @@ object ProductQuant {
                             nProbe: Int = 4,
                             dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (idx, coarse, bySub) = cachedIndex(embeddings, cacheKey, nCoarse, d)
-    ivfadcProbeIndex(embeddings, queryPred, k, idx, coarse, bySub, nProbe,
-      Some(d))
+    val (idx, books) = cachedIndex(embeddings, cacheKey, nCoarse, d)
+    ivfadcProbeIndex(embeddings, queryPred, k, idx, books, nProbe, Some(d))
   }
 
   /** Physical-design audit of the PERSISTED index layout (VERDICT r13
@@ -1038,7 +1154,7 @@ object ProductQuant {
 
   /** The width/task arithmetic over ALREADY-COLLECTED per-list counts —
     * shared by [[deriveHotListsWithTotal]] and the callers that obtain
-    * the counts from an aggregation they pay anyway (retrainFlat's
+    * the counts from an aggregation they pay anyway (retrainStore's
     * coverage-guard fold), so the salt derivation can never diverge
     * between the one-relation and folded paths.
     */
@@ -1103,18 +1219,14 @@ object ProductQuant {
     // because swallowing it would publish bookless and, once retention
     // drops the old generation, lose the books forever (round-17
     // review #4)
-    val books = try Some(loadQuantizersMeta(spark, live)) catch {
+    val books = try Some(loadBooks(spark, live)) catch {
       case _: java.util.NoSuchElementException => None
     }
+    // the encoding CONTRACT carries forward inside the books — a
+    // residual generation compacts into a residual one, an opq
+    // generation keeps the rotation its codes were produced under
     val (g2, _) = publishIndex(spark, baseDir, codes,
-      hotWidths = widths, saltTasks = Some(tasks),
-      quantizers = books.map(_._1),
-      // the encoding CONTRACT carries forward with the books — a
-      // residual generation compacts into a residual one, an opq
-      // generation keeps the rotation its codes were produced under
-      scheme = books.map(_._2.scheme).getOrElse("flat"),
-      rotation = books.flatMap(_._2.rotation)
-        .map(_.map { case (w, ww) => (w.toArray, ww) }))
+      hotWidths = widths, saltTasks = Some(tasks), books = books)
     // tombstone hygiene rides every compaction: fold the sidecar to
     // one file and drop the ids no retained generation contains — the
     // generation just published is clean by construction and skipped
@@ -1128,32 +1240,43 @@ object ProductQuant {
     * remedy isn't more salt, it's re-training the coarse quantizer so
     * the list stops existing): retrain with the one-Lloyd-round
     * spherical k-means machinery ([[Similarity.kmeansAssign]] — the
-    * `kmeans_train_curve` trainer's single step), re-LIST the live
-    * generation's code rows under the retrained assignment, and
-    * publish the result as a new generation, born salted if its new
-    * skew still warrants it. Fine codes ride UNCHANGED — a collapsed
-    * list is a LIST-geometry failure, and the fine books never moved;
+    * `kmeans_train_curve` trainer's single step), re-assign the live
+    * generation's vectors under the retrained coarse book, and publish
+    * the result as a new generation, born salted if its new skew still
+    * warrants it. The fine books ride UNCHANGED — a collapsed list is a
+    * LIST-geometry failure, and the within-cell geometry never moved;
     * when the fine books must retrain too, the path is a fresh
-    * [[ivfadcQuantizers]] + [[ivfadcCodesWith]] + [[publishIndex]].
+    * [[trainBooks]] + [[codesWith]] + [[publishIndex]].
+    *
+    * The SCHEME decides what "re-assign" means (VERDICT r17 #1): flat
+    * codes are coarse-independent, so the code words re-LIST verbatim
+    * under the new assignment; OPQ codes are flat codes of rotated
+    * vectors, so they re-list too once the corpus enters the stored
+    * rotation's space — the coarse book retrains where the codes live
+    * and the rotation carries forward; residual codes are RELATIVE to
+    * the centroid they were encoded against, so a re-list would
+    * silently corrupt every score — they RE-ENCODE the index's vectors
+    * against the new coarse book. Everything else is one pipeline: the
+    * same delete exclusion, index scoping, duplicate, dim and coverage
+    * guards for every scheme.
+    *
     * The vec-keyed join of the code relation against the corpus-sized
     * assignment is a real shuffle: retraining is rebuild-class
     * maintenance, priced like one, never on a probe path. The corpus
-    * must COVER the index: a code row whose vec_id the corpus lacks
-    * (or carries with a null embedding) has no retrained assignment,
-    * and silently dropping it would shrink the index under a success
-    * message — so a re-listed row count below the source's REFUSES
+    * must COVER the index: a code row whose vec_id the corpus lacks (or
+    * carries with a null embedding) has no retrained assignment, and
+    * silently dropping it would shrink the index under a success
+    * message — so a carried row count below the source's REFUSES
     * loudly, the writeTombstones convention (round-17 review #3). The
     * store stays SELF-DESCRIBING across the remedy: the old sidecar's
-    * fine books carry forward verbatim (fine codes didn't move) under
-    * the RETRAINED normalized coarse book, so `ivfadcProbeStore` keeps
-    * working on the new generation — mathematically the stored book
-    * ranks probe lists by the same cosine the assignment maximized
-    * (normalized-book dot/‖x‖ == the trainer's dot/(‖x‖·‖c‖)); the two
-    * float paths can diverge only at a round6 tie, a probe-side
-    * list-ranking nuance, never index content. A BOOKLESS store
-    * (synthetic codes) stays bookless. A RESIDUAL store dispatches to
-    * [[retrainResidual]] — its codes are coarse-relative and must
-    * re-encode, never re-list. Returns (fromGen, toGen).
+    * fine books (and scheme) carry forward verbatim under the RETRAINED
+    * normalized coarse book, so [[ivfadcProbeStore]] keeps working on
+    * the new generation — mathematically the stored book ranks probe
+    * lists by the same cosine the assignment maximized (normalized-book
+    * dot/‖x‖ == the trainer's dot/(‖x‖·‖c‖)); the two float paths can
+    * diverge only at a round6 tie, a probe-side list-ranking nuance,
+    * never index content. A BOOKLESS store (synthetic codes) stays
+    * bookless and re-lists. Returns (fromGen, toGen).
     */
   def retrainStore(spark: org.apache.spark.sql.SparkSession,
                    baseDir: String, embeddings: DataFrame,
@@ -1165,51 +1288,9 @@ object ProductQuant {
     // sidecar ABSENCE is the one tolerated case; a read/corruption
     // error must fail the retrain, not silently publish bookless
     // (round-17 review #4)
-    val oldBooks = try Some(loadQuantizersMeta(spark, live)) catch {
+    val books = try Some(loadBooks(spark, live)) catch {
       case _: java.util.NoSuchElementException => None
     }
-    // the SCHEME decides what "retrain" means (VERDICT r17 #1): flat
-    // codes are coarse-independent, so they re-LIST under the new
-    // assignment; residual codes are RELATIVE to the centroid they
-    // were encoded against, so a re-list would silently corrupt every
-    // score — they must RE-ENCODE against the new coarse book
-    if (oldBooks.exists(_._2.scheme == "residual"))
-      retrainResidual(spark, baseDir, embeddings, nCoarse,
-        g, live, oldBooks.get._1._2, oldBooks.get._2)
-    else if (oldBooks.exists(_._2.scheme == "opq")) {
-      // opq codes are flat codes OF ROTATED VECTORS: the re-list
-      // machinery applies verbatim once the corpus enters the stored
-      // rotation's space — the retrained coarse book must live where
-      // the codes do, and the rotation carries forward unchanged
-      val meta = oldBooks.get._2
-      if (Similarity.dimOf(embeddings) != meta.dim)
-        throw new IllegalStateException(
-          s"retrainStore: store at $baseDir was encoded at dim " +
-            s"${meta.dim}; the corpus is dim " +
-            s"${Similarity.dimOf(embeddings)} — refusing a " +
-            "geometry-mismatched retrain")
-      val rots = meta.rotation.get
-        .map { case (ws, x) => (ws.toArray, x) }
-      retrainFlat(spark, baseDir,
-        opqRotateK(embeddings, rots, meta.dim),
-        nCoarse, g, live, oldBooks, scheme = "opq",
-        rotation = Some(rots))
-    }
-    else retrainFlat(spark, baseDir, embeddings, nCoarse, g, live,
-      oldBooks)
-  } // withLease
-
-  /** [[retrainStore]]'s flat leg: re-LIST the live generation's code
-    * rows under the retrained assignment (flat codes are
-    * coarse-independent, so the code words carry verbatim).
-    */
-  private def retrainFlat(spark: org.apache.spark.sql.SparkSession,
-                          baseDir: String, embeddings: DataFrame,
-                          nCoarse: Int, g: Int, live: String,
-                          oldBooks: Option[(Quantizers, IndexMeta)],
-                          scheme: String = "flat",
-                          rotation: Option[Seq[(Array[Long], Long)]] = None)
-      : (Int, Int) = {
     // a retrain is a store MUTATION: self-recover a legacy interrupted
     // GC first (the writeTombstones/compactStore convention), then
     // anti-join the standing deletes out of the source rows — pending
@@ -1221,139 +1302,109 @@ object ProductQuant {
     recoverTombstoneGc(spark, baseDir)
     val raw = readCodes(spark, live)
       .select(col("vec_id"), col("sub"), col("code"))
-    val codes = hintedTombstones(spark, baseDir).fold(raw)(t =>
+    val src = hintedTombstones(spark, baseDir).fold(raw)(t =>
       raw.join(t.select("vec_id"), Seq("vec_id"), "left_anti"))
-    val (coarseBook, assign0) = Similarity.kmeansQuantizer(embeddings,
-      nCoarse)
     // a GROWN corpus is the ingesting store's normal state (VERDICT
     // r17 #4): vectors the corpus gained since the live generation was
-    // published have no code rows to re-list, so only assignments for
-    // ids the INDEX holds participate in the guards below — the
+    // published have no code rows to carry, so only corpus rows for
+    // ids the INDEX holds take part in the guards below — the
     // missing-id refusal (corpus ⊅ index) is untouched, because a
-    // missing id still yields no assignment row for its code rows
-    val assign = assign0
-      .select(col("vec_id"), col("ccid").cast("int").as("ccid"))
-      .join(codes.select("vec_id").distinct(), Seq("vec_id"), "left_semi")
-    val relisted = codes.join(assign, "vec_id")
-      .select(col("vec_id"), col("ccid"), col("sub"), col("code"))
+    // missing id still yields no assignment for its code rows
+    val ids = src.select("vec_id").distinct()
+    val corpus = embeddings.join(ids, Seq("vec_id"), "left_semi")
     // duplicate guard FIRST (round-17 review-2 #1): with dup corpus
-    // ids the row-count check alone can pass by offset — one missing
+    // ids the coverage check alone can pass by offset — one missing
     // id's dropped rows cancel one duplicated id's doubled rows, and
     // the doubled code rows would then double-count that vector's ADC
-    // sums at probe time. One aggregation job over the (index-scoped)
-    // assignment — a duplicate among corpus vectors the index never
-    // held can't inflate anything and doesn't refuse.
-    val ar = assign
-      .agg(count(lit(1)).as("n"), count_distinct(col("vec_id")).as("d"))
-      .head()
+    // sums at probe time. A duplicate among corpus vectors the index
+    // never held can't inflate anything and doesn't refuse. The same
+    // aggregation reads the corpus's vector lengths, so the dim gate
+    // costs no extra job: the books' geometry is what the stored codes
+    // assume, and a rotation or re-encode under another dim would read
+    // the wrong components.
+    val len = when(col("embedding").isNotNull, size(col("embedding")))
+    val ar = corpus.agg(count(lit(1)), count_distinct(col("vec_id")),
+      min(len), max(len)).head()
     if (ar.getLong(0) != ar.getLong(1)) throw new IllegalStateException(
       s"retrainStore: corpus carries duplicated vec_ids " +
-        s"(${ar.getLong(0)} assignment rows over ${ar.getLong(1)} " +
-        "distinct ids) — refusing to publish an inflated generation")
-    // the coverage guard's denominator: LIVE rows (deletes excluded).
-    // With duplicates excluded above, the join can only DROP rows, so
-    // zero unmatched rows == exact coverage. The unmatched count rides
-    // the SAME per-list aggregation the salt widths need — a LEFT join
-    // parks uncovered code rows in the null-ccid group — replacing the
-    // separate codes.count() denominator pass (one full live-generation
-    // scan per retrain removed; guide §1.2). Matched groups reproduce
-    // the inner join's per-list counts exactly (the publish below still
-    // writes the inner join), so widths/tasks/total are unchanged.
-    val perList = codes.join(assign, Seq("vec_id"), "left")
+        s"(${ar.getLong(0)} rows over ${ar.getLong(1)} distinct ids) " +
+        "— refusing to publish an inflated generation")
+    // (no non-null vector at all: the coverage guard below refuses)
+    books.map(_.meta.dim).filterNot(_ => ar.isNullAt(2)).foreach { d =>
+      val (lo, hi) = (ar.getInt(2), ar.getInt(3))
+      if (lo != d || hi != d)
+        throw new IllegalStateException(
+          s"retrainStore: store at $baseDir was encoded at dim $d; the " +
+            s"corpus is dim ${if (lo == hi) s"$lo" else s"$lo..$hi"} — " +
+            "refusing a geometry-mismatched retrain")
+    }
+    val (coarseBook, assign0) = Similarity.kmeansQuantizer(
+      books.fold(embeddings)(b => inputOf(b.scheme, embeddings, b.meta.dim)),
+      nCoarse)
+    val next = books.map(_.copy(coarse = coarseBook))
+    // the new generation's rows and their (vec_id, ccid) list tags
+    val (codes, tags) = next match {
+      case Some(b @ Books(Scheme.Residual, _, _)) =>
+        val enc = codesWith(corpus, b, b.meta.dim)
+        (enc, enc.select(col("vec_id"), col("ccid").cast("int").as("ccid"))
+          .distinct())
+      case _ =>
+        val assign = assign0
+          .select(col("vec_id"), col("ccid").cast("int").as("ccid"))
+          .join(ids, Seq("vec_id"), "left_semi")
+        (src.join(assign, "vec_id")
+          .select(col("vec_id"), col("ccid"), col("sub"), col("code")),
+          assign)
+    }
+    // coverage guard, denominator = LIVE rows (deletes excluded). With
+    // duplicates excluded above, the join can only DROP rows, so zero
+    // unmatched rows == exact coverage. The unmatched count rides the
+    // SAME per-list aggregation the salt widths need — a LEFT join
+    // parks uncovered code rows in the null-ccid group — so the guard
+    // and the widths cost one live-generation scan, not two (guide
+    // §1.2). Matched groups reproduce the published relation's per-list
+    // counts exactly (every vector carries the same m code rows before
+    // and after), so widths/tasks/total describe what is written.
+    val perList = src.join(tags, Seq("vec_id"), "left")
       .groupBy("ccid").agg(count(lit(1)).as("n")).collect()
     val missing = perList.filter(_.isNullAt(0)).map(_.getLong(1)).sum
     val (widths, tasks, total) = hotListsFromCounts(
       perList.filter(!_.isNullAt(0))
         .map(r => (r.getInt(0), r.getLong(1))).toSeq)
     if (missing > 0L) throw new IllegalStateException(
-      s"retrainStore: only $total of ${total + missing} code rows of " +
-        s"v$g re-listed — the corpus does not cover the index (missing " +
-        "or null-embedding vec_ids); refusing to publish a shrunken " +
-        "generation")
-    val (g2, _) = publishIndex(spark, baseDir, relisted,
-      hotWidths = widths, saltTasks = Some(tasks),
-      quantizers = oldBooks.map { case ((_, bySub), _) =>
-        (coarseBook, bySub) },
-      scheme = scheme, rotation = rotation)
+      s"retrainStore: only $total of ${total + missing} live code rows of " +
+        s"v$g carried into the new generation — the corpus does not " +
+        "cover the index (missing or null-embedding vec_ids); refusing " +
+        "to publish a shrunken generation")
+    val (g2, _) = publishIndex(spark, baseDir, codes,
+      hotWidths = widths, saltTasks = Some(tasks), books = next)
     (g, g2)
-  }
+  } // withLease
 
-  /** [[retrainStore]]'s residual leg: residual codes are relative to
-    * the coarse centroid they were encoded against, so the remedy
-    * RE-ENCODES the live generation's vectors against the retrained
-    * coarse book (fine books carried forward — within-cell spread
-    * geometry didn't move) instead of re-listing coarse-relative code
-    * words that would no longer mean what the probe reconstructs.
-    * Same guards as the flat leg: pending deletes excluded, corpus
-    * scoped to index ids (grown corpus accepted), duplicate and
-    * coverage refusals intact — plus a dim gate, because the re-encode
-    * actually reads vector components where the flat re-list never did.
+  /** The full deployment path in one call (VERDICT r15 #1), for any
+    * `scheme`: train the books ([[trainBooks]]), publish the REAL PQ
+    * code relation as a complete self-describing store generation via
+    * [[publishIndex]] — codes + books + scheme (+ rotation) — and probe
+    * the resolved live generation through BOOKS LOADED FROM THE STORE
+    * ([[ivfadcProbeStore]]): publish → resolve → probe, the seam a
+    * 100 TB embed store runs every refresh cycle. The trained books go
+    * out of scope before the probe, exactly like the separate processes
+    * they stand in for; the caller of an OPQ store hands RAW embeddings
+    * and the store supplies its own rotation. Row-identical to the
+    * in-memory [[ivfadcTopK]] of the same scheme by construction: the
+    * published codes are the same single-scan relation, the loaded
+    * books are bit-identical to the written ones ([[loadBooks]]), and
+    * the scoring is the same function — the oracle is the same SQL.
     */
-  private def retrainResidual(spark: org.apache.spark.sql.SparkSession,
-                              baseDir: String, embeddings: DataFrame,
-                              nCoarse: Int, g: Int, live: String,
-                              fineBooks: Map[Int, Seq[(Long, Array[Double])]],
-                              meta: IndexMeta): (Int, Int) = {
-    val d = Similarity.dimOf(embeddings)
-    if (d != meta.dim) throw new IllegalStateException(
-      s"retrainStore: store at $baseDir was encoded at dim ${meta.dim};" +
-        s" the corpus is dim $d — refusing a geometry-mismatched " +
-        "re-encode")
-    recoverTombstoneGc(spark, baseDir)
-    val raw = readCodeIds(spark, live).select(col("vec_id"))
-    val liveIdRows = hintedTombstones(spark, baseDir).fold(raw)(t =>
-      raw.join(t.select("vec_id"), Seq("vec_id"), "left_anti"))
-    val idxIds = liveIdRows.distinct()
-    val corpusIdx = embeddings
-      .join(idxIds, Seq("vec_id"), "left_semi")
-    val ar = corpusIdx
-      .agg(count(lit(1)).as("n"), count_distinct(col("vec_id")).as("d"))
-      .head()
-    if (ar.getLong(0) != ar.getLong(1)) throw new IllegalStateException(
-      s"retrainStore: corpus carries duplicated vec_ids " +
-        s"(${ar.getLong(0)} rows over ${ar.getLong(1)} distinct ids) " +
-        "— refusing to publish an inflated generation")
-    val (coarseBook, _) = Similarity.kmeansQuantizer(embeddings, nCoarse)
-    val enc = ivfadcResidualCodesWith(corpusIdx, coarseBook, fineBooks, d)
-    val srcRows = liveIdRows.count()
-    val (widths, tasks, total) = deriveHotListsWithTotal(enc)
-    if (total != srcRows) throw new IllegalStateException(
-      s"retrainStore: re-encoded $total code rows against $srcRows " +
-        s"live rows of v$g — the corpus does not cover the index " +
-        "(missing or null-embedding vec_ids); refusing to publish a " +
-        "shrunken generation")
-    val (g2, _) = publishIndex(spark, baseDir, enc,
-      hotWidths = widths, saltTasks = Some(tasks),
-      quantizers = Some((coarseBook, fineBooks)), scheme = "residual")
-    (g, g2)
-  }
-
-  /** The full deployment path in one call (VERDICT r15 #1): train the
-    * quantizers, publish the REAL PQ code relation as a complete store
-    * generation via [[publishIndex]], resolve the live generation with
-    * [[currentIndexDir]], and probe the resolved immutable directory
-    * through [[ivfadcProbeIndex]] — publish → resolve → probe, the
-    * seam a 100 TB embed store runs every refresh cycle. Since r17 the
-    * publish carries the quantizer sidecar and the probe runs on BOOKS
-    * LOADED FROM THE STORE ([[ivfadcProbeStore]]) — the trained books
-    * go out of scope before the probe, exactly like the separate
-    * processes they stand in for. Row-identical to
-    * [[ivfadcPartitionedTopK]] by construction: the published codes
-    * are the same single-scan relation, [[writeIndex]]'s one
-    * discipline writes them, the loaded books are bit-identical to the
-    * written ones ([[loadQuantizers]]), and the probe is literally the
-    * same function over the resolved path — the oracle is the same SQL.
-    */
-  def ivfadcStoreProbeTopK(embeddings: DataFrame, queryPred: Column,
-                           k: Int, baseDir: String, nCoarse: Int = 16,
-                           nProbe: Int = 4,
-                           dim: Option[Int] = None): DataFrame = {
+  def ivfadcStoreTopK(embeddings: DataFrame, queryPred: Column, k: Int,
+                      baseDir: String, scheme: Scheme, nCoarse: Int = 16,
+                      nProbe: Int = 4,
+                      dim: Option[Int] = None): DataFrame = {
     val spark = embeddings.sparkSession
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (coarse, bySub) = ivfadcQuantizers(embeddings, nCoarse, d)
-    publishIndex(spark, baseDir,
-      ivfadcCodesWith(embeddings, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)))
+    val books = trainBooks(embeddings, scheme, nCoarse, d)
+    publishIndex(spark, baseDir, codesWith(embeddings, books, d),
+      books = Some(books))
     // probe via the STORE path so standing deletes apply — a publish
     // refreshes codes from the caller's corpus (removing deleted rows
     // from the corpus is ingest's job), but the sidecar contract
@@ -1389,7 +1440,7 @@ object ProductQuant {
     // in-process book holder can ever probe. `booksDir` names an
     // existing quantizer sidecar — a generation dir holding
     // `_quantizers`, or the `_quantizers` dir itself — whose meta row
-    // is validated against ITS books by loadQuantizersMeta and whose
+    // is validated against ITS books by loadBooks and whose
     // declared geometry is then cross-checked against the CODES being
     // published, so a scheme/geometry-mismatched pairing refuses
     // before anything becomes visible.
@@ -1398,14 +1449,15 @@ object ProductQuant {
         if (new org.apache.hadoop.fs.Path(bd).getName == QuantizerDir)
           new org.apache.hadoop.fs.Path(bd).getParent.toString
         else bd
-      val loaded @ ((coarse0, bySub0), meta) = loadQuantizersMeta(spark, gen)
+      val loaded = loadBooks(spark, gen)
+      val meta = loaded.meta
       // membership, not ranges: ccid and code are CENTROID IDS (the
       // md5-sampled vectors' vec_ids), so "fits the books" means every
       // ccid is a coarse centroid and every (sub, code) is a fine
       // centroid of that subspace — checked in ONE validation scan
       // against ≤ nCoarse + m·ks broadcast literals
-      val coarseIds = coarse0.map(_._1)
-      val pairKeys = bySub0.toSeq.flatMap { case (s, cs) =>
+      val coarseIds = loaded.coarse.map(_._1)
+      val pairKeys = loaded.fine.toSeq.flatMap { case (s, cs) =>
         cs.map(c => s"$s:${c._1}") }
       // PER-VECTOR completeness rides the same scan (ADVICE r19 #3):
       // global membership alone accepts a relation where some vec_id
@@ -1437,14 +1489,11 @@ object ProductQuant {
       loaded
     }
     publishIndex(spark, baseDir, codes, hotWidths = widths,
-      saltTasks = Some(tasks), quantizers = books.map(_._1),
-      scheme = books.map(_._2.scheme).getOrElse("flat"),
-      // the rotation is PART of the opq contract (ADVICE r19 #2: a
-      // scheme-only forward always threw writeQuantizers' half-publish
-      // refusal, bricking the shell bootstrap for exactly the scheme
-      // that needs it) — mirror compactStore's carry-forward
-      rotation = books.flatMap(_._2.rotation)
-        .map(_.map { case (w, ww) => (w.toArray, ww) }))
+      saltTasks = Some(tasks),
+      // the books carry the scheme AND an opq rotation forward (ADVICE
+      // r19 #2: a scheme-only forward bricked the shell bootstrap for
+      // exactly the scheme that needs it) — compactStore's carry-forward
+      books = books)
   }
 
   /** Store-wide audit (VERDICT r15 #8): [[indexLayoutAudit]] of every
@@ -1984,57 +2033,35 @@ object ProductQuant {
 
   /** Probe the store's LIVE generation with BOOKS LOADED FROM THE
     * STORE (VERDICT r16 #1) — the fresh probe-only process's whole
-    * path: resolve the live generation ([[currentGeneration]]), load
-    * its quantizer sidecar ([[loadQuantizers]] — a book-sized parquet
-    * read, NOT a training scan of the corpus), apply standing deletes,
-    * and run the one pruned probe ([[ivfadcProbeIndex]]). The
-    * `embeddings` relation is touched only where every two-stage ANN
-    * design touches it — the query side and the exact rerank's
-    * candidate lookup — never to re-derive the books. Tombstones
-    * affect RETRIEVABILITY only; the query side is untouched.
+    * path, for every scheme: resolve the generation
+    * ([[resolveGeneration]]), load its quantizer sidecar ([[loadBooks]]
+    * — a book-sized parquet read, NOT a training scan of the corpus),
+    * apply standing deletes, and run the one pruned probe
+    * ([[ivfadcProbeIndex]]). The scheme — and an OPQ rotation — come
+    * from the sidecar the codes were written with, never from the
+    * caller, so a probe whose scoring disagrees with its codes (a flat
+    * LUT over residual codes silently mis-scores every candidate)
+    * cannot be expressed. The `embeddings` relation is touched only
+    * where every two-stage ANN design touches it — the query side and
+    * the exact rerank's candidate lookup — never to re-derive the
+    * books. Tombstones affect RETRIEVABILITY only; the query side is
+    * untouched. `gen` pins a RETAINED generation — the time-travel
+    * probe (VERDICT r19 #6): its own books resolve with it, so a v1
+    * probe after v2 publishes is row-identical to the pre-v2 probe.
     */
   def ivfadcProbeStore(embeddings: DataFrame, queryPred: Column, k: Int,
                        baseDir: String, nProbe: Int = 4,
                        dim: Option[Int] = None,
                        gen: Option[Int] = None): DataFrame = {
     val spark = embeddings.sparkSession
-    // `gen` pins a RETAINED generation — the time-travel probe
-    // (VERDICT r19 #6): its own books resolve with it, so a v1 probe
-    // after v2 publishes is row-identical to the pre-v2 probe
     val (_, genDir) = resolveGeneration(spark, baseDir, gen)
-    val ((coarse, bySub), meta) = loadQuantizersMeta(spark, genDir)
-    // scheme gate (VERDICT r17 #1): a flat LUT over residual codes
-    // silently mis-scores every candidate — wrong answers with a
-    // straight face, the one failure mode a self-describing store
-    // exists to make impossible
-    if (meta.scheme != "flat") throw new IllegalStateException(
-      s"store at $baseDir holds ${meta.scheme}-encoded codes — probe " +
-        "it with " + (if (meta.scheme == "residual")
-          "ivfadcResidualProbeStore" else "ivfadcOpqProbeStore") +
-        ", not the flat LUT path")
+    val books = loadBooks(spark, genDir)
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    if (meta.dim != d) throw new IllegalStateException(
-      s"store at $baseDir was encoded at dim ${meta.dim}; the probe " +
-        s"corpus is dim $d — refusing a geometry-mismatched probe")
-    ivfadcProbeIndex(embeddings, queryPred, k, genDir, coarse, bySub,
-      nProbe, Some(d), excludeIds = hintedTombstones(spark, baseDir))
-  }
-
-  /** [[ivfadcProbeStore]] for a caller that already HOLDS the frozen
-    * quantizers (the build session's steady state — no reason to
-    * re-read what's in hand): same resolve → delete-filter → pruned
-    * probe, books passed instead of loaded.
-    */
-  def ivfadcProbeStoreWith(embeddings: DataFrame, queryPred: Column,
-                           k: Int, baseDir: String,
-                           coarse: Seq[(Long, Array[Double])],
-                           bySub: Map[Int, Seq[(Long, Array[Double])]],
-                           nProbe: Int = 4,
-                           dim: Option[Int] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    ivfadcProbeIndex(embeddings, queryPred, k,
-      currentIndexDir(spark, baseDir), coarse, bySub, nProbe, dim,
-      excludeIds = hintedTombstones(spark, baseDir))
+    if (books.meta.dim != d) throw new IllegalStateException(
+      s"store at $baseDir was encoded at dim ${books.meta.dim}; the " +
+        s"probe corpus is dim $d — refusing a geometry-mismatched probe")
+    ivfadcProbeIndex(embeddings, queryPred, k, genDir, books, nProbe,
+      Some(d), excludeIds = hintedTombstones(spark, baseDir))
   }
 
   /** Cross-generation index diff — the refresh-cycle observability a
@@ -2092,12 +2119,6 @@ object ProductQuant {
       .groupBy("ccid", "status").agg(count(lit(1)).as("n_vecs"))
   }
 
-  /** A store generation's frozen quantizers as the probe paths pass
-    * them around: (coarse centroids, per-subspace fine codebooks).
-    */
-  type Quantizers =
-    (Seq[(Long, Array[Double])], Map[Int, Seq[(Long, Array[Double])]])
-
   /** The per-generation quantizer sidecar's directory name.
     * Underscore-prefixed like [[TombstoneDir]]: Hadoop hides
     * `_`-children from input listings, so a probe's scan of the
@@ -2105,89 +2126,64 @@ object ProductQuant {
     */
   val QuantizerDir = "_quantizers"
 
-  /** Persist BOTH frozen quantizers under a generation directory —
-    * what makes the store SELF-DESCRIBING (VERDICT r16 #1): published
-    * codes are uninterpretable without the books that encoded them,
-    * and without the sidecar a fresh probe-only process had to
-    * re-derive the books from the training corpus — the one scan the
-    * index exists to avoid — while a retained older generation encoded
-    * under since-retrained books had no recorded book AT ALL. The
-    * sidecar is a few KB of parquet (nCoarse + AdcM·AdcKs rows by the
-    * codebook contract); `ord` records each row's position inside its
-    * book so [[loadQuantizers]] rebuilds the exact driver-side
-    * sequences — bit-identical literals, bit-identical plans.
+  /** The generation's ENCODING CONTRACT as the sidecar's meta row
+    * records it (VERDICT r17 #1): the scheme the code words were
+    * produced under and the quantizer geometry they assume — derived
+    * from a [[Books]] value ([[Books.meta]]), never set apart from it.
     */
-  /** The generation's ENCODING CONTRACT, persisted beside its books
-    * (VERDICT r17 #1): which scheme the code words were produced
-    * under and the quantizer geometry they assume. Books alone cannot
-    * say this — flat and residual IVFADC share the exact same
-    * (coarse, fine-books) shape, but a flat probe's LUT over
-    * residual codes silently mis-scores every candidate, and a
-    * re-LIST of residual codes under a retrained coarse book corrupts
-    * them (residual codes are relative to the centroid they were
-    * encoded against). A store that cannot refuse a scheme-mismatched
-    * probe is not self-describing.
-    */
-  case class IndexMeta(scheme: String, nCoarse: Int, m: Int, ks: Int,
-                       dim: Int,
-                       rotation: Option[Seq[(Seq[Long], Long)]] = None) {
+  case class IndexMeta(scheme: Scheme, nCoarse: Int, m: Int, ks: Int,
+                       dim: Int) {
     override def toString: String =
-      s"IndexMeta($scheme,$nCoarse,$m,$ks,$dim" +
-        rotation.fold("")(r =>
-          s",rot[${r.length}x${r.headOption.fold(0)(_._1.length)}]") + ")"
+      s"IndexMeta(${scheme.name},$nCoarse,$m,$ks,$dim" + (scheme match {
+        case Scheme.Opq(r) => s",rot[${r.length}x${r.head._1.length}]"
+        case _             => ""
+      }) + ")"
   }
 
+  /** The meta row's scheme codes — part of the ON-DISK format: stores
+    * written by earlier binaries carry these numbers, so they never
+    * change meaning.
+    */
   private val SchemeCodes =
     Map("flat" -> 0L, "residual" -> 1L, "opq" -> 2L)
 
-  /** The geometry [[writeQuantizers]] records and [[loadQuantizersMeta]]
-    * cross-checks — derived from the books themselves, so the meta row
-    * can never silently disagree with what it describes.
+  /** Persist a generation's books under its directory — what makes the
+    * store SELF-DESCRIBING (VERDICT r16 #1): published codes are
+    * uninterpretable without the books that encoded them, and without
+    * the sidecar a fresh probe-only process had to re-derive the books
+    * from the training corpus — the one scan the index exists to avoid
+    * — while a retained older generation encoded under since-retrained
+    * books had no recorded book AT ALL. The sidecar is a few KB of
+    * parquet (nCoarse + AdcM·AdcKs rows by the codebook contract):
+    * one `meta` row (scheme code; nCoarse, m, ks, dim), one `rot` row
+    * per OPQ reflection, then the `coarse` and `book` rows, each with
+    * `ord` recording its position inside its book so [[loadBooks]]
+    * rebuilds the exact driver-side sequences — bit-identical literals,
+    * bit-identical plans.
     */
-  private def metaOf(scheme: String, coarse: Seq[(Long, Array[Double])],
-                     bySub: Map[Int, Seq[(Long, Array[Double])]]): IndexMeta =
-    IndexMeta(scheme, coarse.length, bySub.size,
-      bySub.valuesIterator.map(_.length).maxOption.getOrElse(0),
-      coarse.headOption.map(_._2.length).getOrElse(0))
-
   def writeQuantizers(spark: org.apache.spark.sql.SparkSession,
-                      genDir: String,
-                      coarse: Seq[(Long, Array[Double])],
-                      bySub: Map[Int, Seq[(Long, Array[Double])]],
-                      scheme: String = "flat",
-                      rotation: Option[Seq[(Array[Long], Long)]] = None)
-      : Unit = {
+                      genDir: String, books: Books): Unit = {
     import spark.implicits._
-    val schemeCode = SchemeCodes.getOrElse(scheme,
-      throw new IllegalArgumentException(
-        s"writeQuantizers: unknown encoding scheme '$scheme' " +
-          s"(known: ${SchemeCodes.keys.toSeq.sorted.mkString(", ")})"))
-    // the rotation is PART of the opq contract, not an accessory: opq
-    // codes are quantizations of rotated vectors, so books + codes
-    // without the rotation are as uninterpretable as residual codes
-    // without their coarse book — refuse the half-publish either way
-    if (rotation.exists(_.isEmpty) ||
-        rotation.isDefined != (scheme == "opq"))
-      throw new IllegalArgumentException(
-        s"writeQuantizers: scheme '$scheme' " +
-          (if (scheme == "opq") "requires the rotation it encoded under"
-           else s"cannot carry a rotation row"))
-    val m = metaOf(scheme, coarse, bySub)
+    val m = books.meta
+    val rotation = books.scheme match {
+      case Scheme.Opq(r) => r
+      case _             => Nil
+    }
     val rows =
-      Seq(("meta", -1, 0, schemeCode,
+      Seq(("meta", -1, 0, SchemeCodes(books.scheme.name),
         Seq(m.nCoarse.toDouble, m.m.toDouble, m.ks.toDouble,
           m.dim.toDouble))) ++
       // k Householder reflections (VERDICT r19 #4), each w in exact
       // micro-longs (≤ ~2e6, exact in double) keyed by its denominator
       // w'w — ONE row per reflection, `ord` recording the APPLICATION
-      // ORDER; [[loadQuantizersMeta]] rebuilds the sequence
-      // bit-identically (a single-reflection store keeps its one row —
-      // the k=1 layout is unchanged)
-      rotation.toSeq.flatten.zipWithIndex.map { case ((w, ww), i) =>
-        ("rot", -1, i, ww, w.map(_.toDouble).toSeq) } ++
-      coarse.zipWithIndex.map { case ((cid, v), i) =>
+      // ORDER; [[loadBooks]] rebuilds the sequence bit-identically (a
+      // single-reflection store keeps its one row — the k=1 layout is
+      // unchanged)
+      rotation.zipWithIndex.map { case ((w, ww), i) =>
+        ("rot", -1, i, ww, w.map(_.toDouble)) } ++
+      books.coarse.zipWithIndex.map { case ((cid, v), i) =>
         ("coarse", -1, i, cid, v.toSeq) } ++
-        bySub.toSeq.sortBy(_._1).flatMap { case (s, cents) =>
+        books.fine.toSeq.sortBy(_._1).flatMap { case (s, cents) =>
           cents.zipWithIndex.map { case ((cid, v), i) =>
             ("book", s, i, cid, v.toSeq) } }
     rows.toDF("kind", "sub", "ord", "cid", "cv")
@@ -2196,29 +2192,22 @@ object ProductQuant {
       .parquet(s"${genDir.stripSuffix("/")}/$QuantizerDir")
   }
 
-  /** Load a generation's quantizer sidecar — the probe-only process's
-    * replacement for retraining ([[ivfadcProbeStore]]). One bounded
-    * collect (book-sized by construction); rows reassemble in their
-    * recorded `ord` so the rebuilt sequences are bit-identical to what
+  /** Load a generation's books — the probe-only process's replacement
+    * for retraining ([[ivfadcProbeStore]]). One bounded collect
+    * (book-sized by construction); rows reassemble in their recorded
+    * `ord` so the rebuilt sequences are bit-identical to what
     * [[writeQuantizers]] was handed. Fails LOUDLY on a generation
     * published without books (a [[publishStore]] of raw codes, or a
-    * pre-sidecar publish) — probing one requires explicitly-held
-    * quantizers ([[ivfadcProbeStoreWith]]).
+    * pre-sidecar publish) — republish it with books, or probe it with
+    * explicitly-held ones through [[ivfadcProbeIndex]]. A sidecar
+    * WITHOUT a meta row (written by a pre-r18 binary) reads as flat —
+    * an honest default, because flat was the only scheme any pre-meta
+    * writer produced. A sidecar WHOSE meta row disagrees with the books
+    * it sits beside is corruption and fails loudly — the probe that
+    * trusted either half could silently mis-score.
     */
-  def loadQuantizers(spark: org.apache.spark.sql.SparkSession,
-                     genDir: String): Quantizers =
-    loadQuantizersMeta(spark, genDir)._1
-
-  /** [[loadQuantizers]] plus the generation's [[IndexMeta]] encoding
-    * contract. A sidecar WITHOUT a meta row (written by a pre-r18
-    * binary) reads as flat with geometry derived from the books — an
-    * honest default, because flat was the only scheme any pre-meta
-    * writer produced. A sidecar WHOSE meta row disagrees with the
-    * books it sits beside is corruption and fails loudly — the probe
-    * that trusted either half could silently mis-score.
-    */
-  def loadQuantizersMeta(spark: org.apache.spark.sql.SparkSession,
-                         genDir: String): (Quantizers, IndexMeta) = {
+  def loadBooks(spark: org.apache.spark.sql.SparkSession,
+                genDir: String): Books = {
     import org.apache.hadoop.fs.Path
     val p = new Path(s"${genDir.stripSuffix("/")}/$QuantizerDir")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -2226,8 +2215,8 @@ object ProductQuant {
       st.isFile && st.getPath.getName.endsWith(".parquet"))
     if (!present) throw new java.util.NoSuchElementException(
       s"no quantizer sidecar under $genDir — the generation was " +
-        "published without books; probe it with explicitly-held " +
-        "quantizers (ivfadcProbeStoreWith) or republish with them")
+        "published without books; republish it with books or probe it " +
+        "with explicitly-held ones (ivfadcProbeIndex)")
     // the sidecar schema is this module's own write contract
     // ([[writeQuantizers]]) — pin it so the read skips the
     // footer/schema-inference pass (a per-read metadata RPC on an
@@ -2249,61 +2238,60 @@ object ProductQuant {
     val coarse = rows.filter(_.getString(0) == "coarse")
       .sortBy(_.getInt(2))
       .map(r => (r.getLong(3), r.getSeq[Double](4).toArray)).toSeq
-    val bySub = rows.filter(_.getString(0) == "book")
+    val fine = rows.filter(_.getString(0) == "book")
       .groupBy(_.getInt(1))
       .map { case (s, rs) =>
         s -> rs.sortBy(_.getInt(2))
           .map(r => (r.getLong(3), r.getSeq[Double](4).toArray)).toSeq }
-    val derived = metaOf("flat", coarse, bySub)
+    val derived = Books(Scheme.Flat, coarse, fine).meta
     // the opq rotation rows, rebuilt (w, ww) bit-identically in their
     // recorded APPLICATION ORDER — micro longs round-trip exactly
     // through the double cv column; a pre-r20 single-row sidecar reads
     // as the 1-reflection sequence it always meant
-    val rotRows = rows.filter(_.getString(0) == "rot").sortBy(_.getInt(2))
-    val rot =
-      if (rotRows.isEmpty) None
-      else Some(rotRows.map(r =>
-        (r.getSeq[Double](4).map(_.toLong), r.getLong(3))).toSeq)
-    val meta = rows.find(_.getString(0) == "meta") match {
+    val rot = rows.filter(_.getString(0) == "rot").sortBy(_.getInt(2))
+      .map(r => (r.getSeq[Double](4).map(_.toLong), r.getLong(3))).toSeq
+    val scheme = rows.find(_.getString(0) == "meta") match {
       case None =>
         // pre-meta sidecars predate rotations too — a rot row beside
         // no meta row is corruption, not a legacy layout
         if (rot.nonEmpty) throw new IllegalStateException(
           s"quantizer sidecar under $genDir carries a rotation row " +
             "but no meta row — refusing to guess the encoding contract")
-        derived
+        Scheme.Flat
       case Some(r) =>
-        val scheme = SchemeCodes.collectFirst {
+        val name = SchemeCodes.collectFirst {
           case (name, code) if code == r.getLong(3) => name
         }.getOrElse(throw new IllegalStateException(
           s"quantizer sidecar under $genDir declares unknown encoding " +
             s"scheme code ${r.getLong(3)} — refusing to probe codes " +
             "this binary cannot interpret"))
-        val ps = r.getSeq[Double](4)
-        val recorded = IndexMeta(scheme, ps(0).toInt, ps(1).toInt,
-          ps(2).toInt, ps(3).toInt, rot)
-        if ((recorded.nCoarse, recorded.m, recorded.ks, recorded.dim) !=
-            (derived.nCoarse, derived.m, derived.ks, derived.dim))
+        val ps = r.getSeq[Double](4).take(4).map(_.toInt)
+        if (ps != Seq(derived.nCoarse, derived.m, derived.ks, derived.dim))
           throw new IllegalStateException(
             s"quantizer sidecar under $genDir is corrupt: recorded " +
-              s"geometry $recorded disagrees with the books beside it " +
-              s"(${derived.copy(scheme = recorded.scheme)})")
+              s"$name geometry (nCoarse,m,ks,dim) = " +
+              s"(${ps.mkString(",")}) disagrees with the books beside it " +
+              s"($derived)")
         // the rotation is part of the opq contract in BOTH directions:
         // opq codes without their rotation are uninterpretable, and a
         // rotation beside flat/residual codes means the sidecar halves
         // disagree about what the codes are
-        if ((scheme == "opq") != rot.nonEmpty)
+        if ((name == "opq") != rot.nonEmpty)
           throw new IllegalStateException(
             s"quantizer sidecar under $genDir is corrupt: scheme " +
-              s"'$scheme' with rotation ${if (rot.isEmpty) "MISSING"
+              s"'$name' with rotation ${if (rot.isEmpty) "MISSING"
                 else "PRESENT"} — refusing to mis-score")
-        rot.toSeq.flatten.filter(_._1.length != derived.dim).foreach { w =>
+        rot.filter(_._1.length != derived.dim).foreach { w =>
           throw new IllegalStateException(
             s"quantizer sidecar under $genDir is corrupt: rotation of " +
               s"dim ${w._1.length} beside dim-${derived.dim} books") }
-        recorded
+        name match {
+          case "flat"     => Scheme.Flat
+          case "residual" => Scheme.Residual
+          case _          => Scheme.Opq(rot)
+        }
     }
-    ((coarse, bySub), meta)
+    Books(scheme, coarse, fine)
   }
 
   /** Versioned index publication — the reader-ATOMIC layer the
@@ -2328,9 +2316,7 @@ object ProductQuant {
                    saltBuckets: Int = SaltBuckets,
                    saltTasks: Option[Int] = None,
                    hotWidths: Map[Int, Int] = Map.empty,
-                   quantizers: Option[Quantizers] = None,
-                   scheme: String = "flat",
-                   rotation: Option[Seq[(Array[Long], Long)]] = None)
+                   books: Option[Books] = None)
       : (Int, String) =
       // the single-writer contract, ENFORCED (VERDICT r17 #2): the
       // generation numbering below is a read-modify-write, and the
@@ -2356,9 +2342,8 @@ object ProductQuant {
     // reader always finds them; the one reader that can arrive between
     // _SUCCESS and the sidecar is the crash-window _SUCCESS FALLBACK
     // racing an in-flight publish, which the single-writer contract
-    // already scopes — and loadQuantizers fails loudly, never wrongly
-    quantizers.foreach { case (coarse, bySub) =>
-      writeQuantizers(spark, dir, coarse, bySub, scheme, rotation) }
+    // already scopes — and loadBooks fails loudly, never wrongly
+    books.foreach(writeQuantizers(spark, dir, _))
     // pre-commit fence (VERDICT r18 #1): the pointer flip is the one
     // irreversible step — re-verify this thread's acquisition still
     // owns the standing lease, so a writer hijacked mid-mutation (its
@@ -2776,345 +2761,42 @@ object ProductQuant {
   }
 
   /** Incremental ingest into the persisted list-partitioned IVFADC
-    * index — the index-maintenance contract a 100 TB embed store lives
-    * by, composed from the repo's two proven halves
+    * index under `scheme` — the index-maintenance contract a 100 TB
+    * embed store lives by, composed from the repo's two proven halves
     * ([[ivfadcPartitionedTopK]]'s at-rest layout +
     * [[encodeWithBook]]'s frozen-book additive-ingest discipline):
-    * both quantizers (coarse centroids AND fine subspace codebooks)
-    * train on the STANDING corpus only, the standing codes write the
-    * partitioned index once, and a delta batch encodes in an
-    * INDEPENDENT pass against the frozen books and APPENDS into the
-    * same ccid directories — standing files are never read or
-    * re-encoded (append-mode part files are immutable by construction;
-    * the spec pins delta-code completeness, re-run determinism, and the
-    * pruned probe), because a code is a pure per-row function of the
-    * frozen books. The probe then reads
-    * the merged index exactly like the partitioned face. The oracle is
-    * the ONE-SHOT encode of the whole corpus under the same
-    * standing-trained books — the green row proves append == rebuild
-    * at the index level, the same merge==rebuild relational proof every
-    * sketch in this repo ships.
+    * the books (coarse centroids AND fine subspace codebooks) train on
+    * the STANDING corpus only, the standing codes write the partitioned
+    * index once, and a delta batch encodes in an INDEPENDENT pass
+    * against the frozen books and APPENDS into the same ccid
+    * directories — standing files are never read or re-encoded
+    * (append-mode part files are immutable by construction; the spec
+    * pins delta-code completeness, re-run determinism, and the pruned
+    * probe), because a code is a pure per-row function of the frozen
+    * books. The frozen discipline matters doubly for the other schemes:
+    * a residual code is relative to the coarse centroid it was encoded
+    * against, and an OPQ rotation — learned by the caller from the
+    * STANDING corpus and carried inside `scheme` — fixes the space
+    * every code word quantizes in; re-deriving either from the grown
+    * corpus would silently re-interpret every standing code word. The
+    * probe then reads the merged index exactly like the partitioned
+    * face. The oracle is the ONE-SHOT encode of the whole corpus under
+    * the same standing-trained books — the green row proves append ==
+    * rebuild at the index level, the same merge==rebuild relational
+    * proof every sketch in this repo ships.
     */
   def ivfadcIngestTopK(embeddings: DataFrame, standingPred: Column,
                        queryPred: Column, k: Int, indexDir: String,
-                       nCoarse: Int = 16, nProbe: Int = 4,
+                       scheme: Scheme, nCoarse: Int = 16, nProbe: Int = 4,
                        dim: Option[Int] = None): DataFrame = {
-    graft.functions.PqKernels.register(embeddings.sparkSession)
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
     val standing = embeddings.filter(standingPred)
-    // frozen books: BOTH quantizers from the standing corpus (bounded
-    // md5-prefix samples — the codebook contract)
-    val (coarse, bySub) = ivfadcQuantizers(standing, nCoarse, d)
-    writeIndex(ivfadcCodesWith(standing, coarse, bySub, d), indexDir)
-    writeIndex(ivfadcCodesWith(embeddings.filter(!standingPred),
-      coarse, bySub, d), indexDir, mode = "append")
-    // probe the merged index — literally the partitioned face's probe,
-    // with the standing-trained books on the query side
-    ivfadcProbeIndex(embeddings, queryPred, k, indexDir, coarse, bySub,
-      nProbe, Some(d))
-  }
-
-  /** Residual IVFADC — the FULL Jégou et al. 2011 §V encoding, on top
-    * of [[ivfadcTopK]]'s list-routing: the fine product quantizer
-    * compresses the residual x̂ − ĉ (normalized vector minus its coarse
-    * centroid) instead of x̂ itself, and a candidate's approximate score
-    * reconstructs as dot(q̂, ĉ) + Σ_sub dot(q̂_sub, f_code) — the coarse
-    * term from the probe scores, the fine terms from the same broadcast
-    * LUT shape as flat ADC, all in exact integer micro-units. Residual
-    * codebooks spend their 16 cells describing the (much smaller)
-    * within-cell spread, so reconstruction distortion drops — MEASURED
-    * by `adc_distortion` at sf0.01: mean |approx − exact| score error
-    * 146,778 micro-units residual vs 186,328 flat (−21%). The fidelity
-    * gain converts to recall once the shortlist is smaller than the
-    * probed candidate pool (true at scale; at fixture scale the
-    * shortlist rule keeps every probed candidate, so recall ties the
-    * non-residual face at 0.55 and the ledger rows pin the scoring
-    * path and the distortion gap). Training is driver-bounded: the
-    * md5-prefix sample is
-    * normalized, assigned to cells with the engine's own round6-cosine
-    * rule, residualized, and fed to the shared Lloyd-1 trainer.
-    */
-  def ivfadcResidualTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-                         nCoarse: Int = 16, nProbe: Int = 4,
-                         dim: Option[Int] = None): DataFrame = {
-    // register on the CORPUS's session, not the thread-active one — a
-    // fresh session's first face would otherwise plan normN against an
-    // unregistered vec_nrm (the ivfadcProbeIndex note)
-    graft.functions.PqKernels.register(embeddings.sparkSession)
-    graft.functions.LshKernels.register(embeddings.sparkSession)
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (coarse, bySubF) = ivfadcResidualQuantizers(embeddings, nCoarse, d)
-    val enc = ivfadcResidualCodesWith(embeddings, coarse, bySubF, d)
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    val (_, qrel) = residualQueryRel(embN, queryPred, coarse, bySubF, d,
-      nProbe)
-    val scored = enc.join(broadcast(qrel), Seq("ccid", "sub", "code"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg((min("sd6c") + sum("sd6f")).as("adc6"))
-    adcRerank(shortlistOf(scored, embeddings), embeddings, d, k)
-  }
-
-  /** BOTH residual-scheme quantizers (coarse centroids + fine codebooks
-    * trained on the RESIDUAL x̂ − ĉ) — [[ivfadcQuantizers]]' twin for
-    * the Jégou §V encoding, factored out so a residual index can be
-    * PUBLISHED as a store generation and probed by a later process
-    * (VERDICT r17 #1). Training is driver-bounded: the md5-prefix
-    * sample is normalized, assigned with the engine's own round6-cosine
-    * rule (replicated bit-for-bit with [[Similarity.round6]]), and
-    * residualized against the assigned centroid before the shared
-    * Lloyd-1 trainer runs.
-    */
-  def ivfadcResidualQuantizers(embeddings: DataFrame, nCoarse: Int, d: Int)
-      : Quantizers = {
-    // ONE md5-prefix TakeOrdered serves both quantizers (the
-    // ivfadcQuantizers rationale, residual twin): coarse = the first
-    // nCoarse rows, the residual training sample = the first AdcSampleN
-    // rows of the SAME (h, vec_id) order — bit-identical slices of what
-    // two separate corpus collects returned. The 160-row residual
-    // relation then trains through [[codebookOfSample]] DIRECTLY: the
-    // old round-trip rebuilt it as a DataFrame only for codebook() to
-    // re-sort it by the same md5 order and re-collect it — a Spark job
-    // that returned its own input.
-    val samp = collectSample(embeddings, math.max(AdcSampleN, nCoarse),
-      l2Normalize = true)
-    val coarse = samp.take(nCoarse)
-    val cmap: Map[Long, Array[Double]] = coarse.toMap
-    val resRows = samp.take(AdcSampleN)
-      .map { case (id, v) =>
-        val cid = coarse.map { case (ccid, cv) =>
-          var s = 0.0
-          var i = 0
-          while (i < v.length) { s += v(i) * cv(i); i += 1 }
-          (Similarity.round6(s), ccid)
-        }.maxBy { case (sd, ccid) => (sd, -ccid) }._2
-        val cv = cmap(cid)
-        (id, v.indices.map(i => v(i) - cv(i)).toArray)
-      }
-    val bySubF = collectCodebook(codebookOfSample(
-      embeddings.sparkSession, resRows, d, AdcM, AdcKs))
-    (coarse, bySubF)
-  }
-
-  /** The (vec_id, ccid, sub, code) RESIDUAL code relation for `df`
-    * under frozen quantizers — [[ivfadcCodesWith]]'s residual twin.
-    * ONE corpus scan: coarse cell + all AdcM residual codes per row,
-    * both through the native kernels (coarseAssignCol scaladoc; the
-    * residual argmax is `pq_encode_res` with the coarse centroids as
-    * foldable literals resolved per row by ccid). Codes are RELATIVE
-    * to the assigned coarse centroid — which is why a residual
-    * generation can never be re-LISTED under a different coarse book
-    * ([[retrainStore]] re-encodes instead).
-    */
-  def ivfadcResidualCodesWith(df: DataFrame,
-                              coarse: Seq[(Long, Array[Double])],
-                              bySubF: Map[Int, Seq[(Long, Array[Double])]],
-                              d: Int, spread: Boolean = true): DataFrame = {
-    graft.functions.PqKernels.register(df.sparkSession)
-    graft.functions.LshKernels.register(df.sparkSession)
-    val base = if (spread) graft.Tables.spread(df) else df
-    // null embeddings excluded so coarseAssignCol's -1 sentinel can
-    // never materialize a phantom list (adcParts note)
-    val embN = base.filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    val (cvsF, cidsF) = bookLits(bySubF)
-    val withC = embN.select(col("vec_id"), col("embedding"), col("nrm"),
-      coarseAssignCol(col("embedding"), col("nrm"), coarse).as("ccid"))
-    explodeVia(withC, Seq(col("vec_id"), col("ccid")),
-      call_function("pq_encode_res", col("embedding"), col("nrm"),
-        col("ccid"), typedLit(coarse.map(_._1)),
-        typedLit(coarse.map(_._2.toSeq)), cvsF, cidsF),
-      Seq("sub", "code"))
-  }
-
-  /** The residual probe's query relation: probed cells WITH their
-    * coarse dot (micro-units) × the fine LUT (q̂ against residual
-    * centroids — the flat-ADC LUT shape, fold-then-divide, reused
-    * verbatim). Returned as (probe half, joined relation) — the
-    * persisted probe collects its pruned list ids from the CHEAP
-    * probe half alone (a scoreStructs projection), never through the
-    * joined relation, which embeds the LUT aggregation and would run
-    * that job twice. (q_id, ccid, sd6c, sub, code, sd6f); a
-    * candidate's score reconstructs as min(sd6c) + Σ sd6f.
-    */
-  private def residualQueryRel(embN: DataFrame, queryPred: Column,
-                               coarse: Seq[(Long, Array[Double])],
-                               bySubF: Map[Int, Seq[(Long, Array[Double])]],
-                               d: Int, nProbe: Int)
-      : (DataFrame, DataFrame) = {
-    val subLen = d / AdcM
-    val sorted = reverse(array_sort(
-      scoreStructs(col("embedding"), coarse, 0, 0, d, Some(col("nrm")))))
-    val qprobe = embN.filter(queryPred).select(col("vec_id").as("q_id"),
-        explode(transform(slice(sorted, 1, nProbe), x =>
-          struct((-x.getField("ncid")).as("ccid"),
-            round(x.getField("sd") * lit(1000000)).cast("bigint")
-              .as("sd6c")))).as("p"))
-      .select(col("q_id"), col("p.ccid").as("ccid"), col("p.sd6c").as("sd6c"))
-    val lutF = adcLut(embN, queryPred, bySubF, subLen)
-      .withColumnRenamed("sd6", "sd6f")
-    (qprobe, qprobe.join(lutF, "q_id"))
-  }
-
-  /** [[ivfadcProbeIndex]]'s residual twin: probe a PERSISTED residual
-    * code relation — probed-list ids land in the scan's
-    * PartitionFilters so unprobed lists' files never open, standing
-    * deletes leave the candidate set before scoring, and the score
-    * reconstructs as coarse dot + residual LUT sum in exact integer
-    * micro-units (the inline [[ivfadcResidualTopK]] scoring, verbatim,
-    * over the read-back codes).
-    */
-  def ivfadcResidualProbeIndex(embeddings: DataFrame, queryPred: Column,
-                               k: Int, indexDir: String,
-                               coarse: Seq[(Long, Array[Double])],
-                               bySubF: Map[Int, Seq[(Long, Array[Double])]],
-                               nProbe: Int = 4,
-                               dim: Option[Int] = None,
-                               excludeIds: Option[DataFrame] = None)
-      : DataFrame = {
-    val spark = embeddings.sparkSession
-    graft.functions.PqKernels.register(spark)
-    graft.functions.LshKernels.register(spark)
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    val (qprobe, qrel) = residualQueryRel(embN, queryPred, coarse, bySubF,
-      d, nProbe)
-    // ≤ nCoarse probed list ids — bounded driver state by construction;
-    // int literals keep the In inside PartitionFilters (the read-back
-    // partition column is inference-typed INT)
-    val probed = qprobe.select("ccid").distinct().collect()
-      .map(_.getLong(0).toInt).sorted
-    val idx = readCodes(spark, indexDir)
-      .filter(col("ccid").isin(probed: _*))
-    val idxLive = excludeIds.fold(idx)(t =>
-      idx.join(t.select("vec_id"), Seq("vec_id"), "left_anti"))
-    val scored = idxLive
-      .join(broadcast(qrel), Seq("ccid", "sub", "code"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg((min("sd6c") + sum("sd6f")).as("adc6"))
-    adcRerank(shortlistOf(scored, embeddings), embeddings, d, k)
-  }
-
-  /** Probe the store's LIVE generation with residual books LOADED FROM
-    * THE STORE — [[ivfadcProbeStore]]'s twin for residual generations,
-    * with the same scheme gate in the opposite direction: the residual
-    * reconstruction over FLAT codes mis-scores just as silently.
-    */
-  def ivfadcResidualProbeStore(embeddings: DataFrame, queryPred: Column,
-                               k: Int, baseDir: String, nProbe: Int = 4,
-                               dim: Option[Int] = None,
-                               gen: Option[Int] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    val (_, genDir) = resolveGeneration(spark, baseDir, gen)
-    val ((coarse, bySubF), meta) = loadQuantizersMeta(spark, genDir)
-    if (meta.scheme != "residual") throw new IllegalStateException(
-      s"store at $baseDir holds ${meta.scheme}-encoded codes — probe " +
-        "it with ivfadcProbeStore, not the residual reconstruction")
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    if (meta.dim != d) throw new IllegalStateException(
-      s"store at $baseDir was encoded at dim ${meta.dim}; the probe " +
-        s"corpus is dim $d — refusing a geometry-mismatched probe")
-    ivfadcResidualProbeIndex(embeddings, queryPred, k, genDir, coarse,
-      bySubF, nProbe, Some(d),
-      excludeIds = hintedTombstones(spark, baseDir))
-  }
-
-  /** The residual deployment seam (VERDICT r17 #1): train the residual
-    * quantizers, publish the residual code relation as a complete
-    * store generation carrying `scheme = residual` in its sidecar, and
-    * probe the resolved generation through BOOKS LOADED FROM THE STORE
-    * — [[ivfadcStoreProbeTopK]]'s twin for the best-fidelity encoder
-    * (−21% reconstruction distortion vs flat, `adc_distortion`).
-    * Row-identical to [[ivfadcResidualTopK]] by construction: same
-    * single-scan code relation, same books (loaded bit-identically),
-    * same scoring — the oracle is the same SQL.
-    */
-  def ivfadcResidualStoreTopK(embeddings: DataFrame, queryPred: Column,
-                              k: Int, baseDir: String, nCoarse: Int = 16,
-                              nProbe: Int = 4,
-                              dim: Option[Int] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (coarse, bySubF) = ivfadcResidualQuantizers(embeddings, nCoarse, d)
-    publishIndex(spark, baseDir,
-      ivfadcResidualCodesWith(embeddings, coarse, bySubF, d),
-      quantizers = Some((coarse, bySubF)), scheme = "residual")
-    ivfadcResidualProbeStore(embeddings, queryPred, k, baseDir, nProbe,
+    val books = trainBooks(standing, scheme, nCoarse, d)
+    writeIndex(codesWith(standing, books, d), indexDir)
+    writeIndex(codesWith(embeddings.filter(!standingPred), books, d),
+      indexDir, mode = "append")
+    ivfadcProbeIndex(embeddings, queryPred, k, indexDir, books, nProbe,
       Some(d))
-  }
-
-  /** [[ivfadcIngestTopK]]'s residual twin (VERDICT r18 #2 — the
-    * best-fidelity encoder had every store verb EXCEPT incremental
-    * ingest): both quantizers train on the STANDING corpus only, the
-    * standing residual codes write the partitioned index once, and the
-    * delta batch residual-encodes in an independent pass against the
-    * FROZEN books and APPENDS into the same ccid directories. The
-    * frozen-book discipline matters doubly here: a residual code is
-    * relative to the coarse centroid it was encoded against, so
-    * appending under the standing coarse book is the ONLY sound
-    * additive ingest — re-deriving the books from the grown corpus
-    * would silently re-interpret every standing code word. Probe =
-    * [[ivfadcResidualProbeIndex]] over the merged index; append ==
-    * rebuild because each code is a pure per-row function of
-    * (vector, frozen books).
-    */
-  def ivfadcResidualIngestTopK(embeddings: DataFrame, standingPred: Column,
-                               queryPred: Column, k: Int, indexDir: String,
-                               nCoarse: Int = 16, nProbe: Int = 4,
-                               dim: Option[Int] = None): DataFrame = {
-    graft.functions.PqKernels.register(embeddings.sparkSession)
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val standing = embeddings.filter(standingPred)
-    val (coarse, bySubF) = ivfadcResidualQuantizers(standing, nCoarse, d)
-    writeIndex(ivfadcResidualCodesWith(standing, coarse, bySubF, d),
-      indexDir)
-    writeIndex(ivfadcResidualCodesWith(embeddings.filter(!standingPred),
-      coarse, bySubF, d), indexDir, mode = "append")
-    ivfadcResidualProbeIndex(embeddings, queryPred, k, indexDir, coarse,
-      bySubF, nProbe, Some(d))
-  }
-
-  /** [[ivfadcIngestTopK]]'s OPQ twin (VERDICT r19 #1 — flat and
-    * residual both have frozen-book ingest twins; opq had neither):
-    * the ROTATION learns from the STANDING corpus only and freezes
-    * with the books — doubly load-bearing here, because the rotation
-    * is corpus-derived: re-learning it on the grown corpus would
-    * silently re-rotate the space every standing code word quantizes
-    * in (the exact frozen-book failure class the residual twin pins
-    * for coarse-relative codes, one level up). The standing corpus
-    * rotates, trains both quantizers in the rotated space (Ge CVPR
-    * 2013 §4's fixed-rotation step), and writes the partitioned
-    * index; the delta batch rotates under the FROZEN w, encodes
-    * against the frozen books in an independent pass, and APPENDS.
-    * Probe = the ordinary flat probe over the merged index with the
-    * rotated corpus (opq codes ARE flat codes of rotated vectors).
-    * Append == rebuild because rotation and encode are pure per-row
-    * functions of (vector, frozen w, frozen books).
-    */
-  def opqIngestTopK(embeddings: DataFrame, standingPred: Column,
-                    queryPred: Column, k: Int, indexDir: String,
-                    nCoarse: Int = 16, nProbe: Int = 4,
-                    dim: Option[Int] = None): DataFrame = {
-    graft.functions.PqKernels.register(embeddings.sparkSession)
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val standing = embeddings.filter(standingPred)
-    val (w, ww) = opqRotationOf(standing, d)
-    val rotStanding = opqRotate(standing, w, ww, d)
-    val (coarse, bySub) = ivfadcQuantizers(rotStanding, nCoarse, d)
-    writeIndex(ivfadcCodesWith(rotStanding, coarse, bySub, d), indexDir)
-    writeIndex(ivfadcCodesWith(
-      opqRotate(embeddings.filter(!standingPred), w, ww, d),
-      coarse, bySub, d), indexDir, mode = "append")
-    ivfadcProbeIndex(opqRotate(embeddings, w, ww, d), queryPred, k,
-      indexDir, coarse, bySub, nProbe, Some(d))
   }
 
   private def rndHalfAway(x: Double): Long =
@@ -3127,11 +2809,13 @@ object ProductQuant {
     * state), Householder w = v₁ − N·e₀ with N = rnd(√Σv₁²) — the
     * reflection that concentrates the corpus's top covariance
     * direction into subspace 0. Returns (w micro-longs, w'w exact) —
-    * the pair [[writeQuantizers]] persists as the store's rotation row.
+    * the pair a [[Scheme.Opq]] carries and [[writeQuantizers]] persists
+    * as the store's rotation row.
     */
-  def opqRotationOf(embeddings: DataFrame, d: Int): (Array[Long], Long) = {
+  def opqRotationOf(embeddings: DataFrame, d: Int): (Seq[Long], Long) = {
     val (v1, _, _) = Pca.topComponent(embeddings, d)
-    composeHouseholders(Seq(v1), d).head
+    val (w, ww) = composeHouseholders(Seq(v1), d).head
+    (w.toSeq, ww)
   }
 
   /** The TWO-component OPQ rotation (VERDICT r19 #4 — the honest
@@ -3142,12 +2826,13 @@ object ProductQuant {
     * H2 concentrates H1·v2 (orthogonal to e0 up to integer rounding,
     * because v2 ⊥ v1 and H1·v1 = N·e0) into dimension 1, leaving
     * dimension 0 essentially fixed. Returns the ordered reflection
-    * list [[writeQuantizers]] persists as k `rot` rows.
+    * list a [[Scheme.Opq]] carries and [[writeQuantizers]] persists as
+    * k `rot` rows.
     */
   def opqRotationsOf2(embeddings: DataFrame, d: Int)
-      : Seq[(Array[Long], Long)] = {
+      : Seq[(Seq[Long], Long)] = {
     val (v1, v2) = Pca.topTwoComponents(embeddings, d)
-    composeHouseholders(Seq(v1, v2), d)
+    composeHouseholders(Seq(v1, v2), d).map { case (w, ww) => (w.toSeq, ww) }
   }
 
   /** Compose k Householder reflections from k (ordered, deflated)
@@ -3184,22 +2869,12 @@ object ProductQuant {
     rots.toSeq
   }
 
-  /** Apply the stored Householder to a (vec_id, embedding) relation —
-    * the [[Opq]] integer discipline verbatim: micro-quantize, one
-    * exact-long w·x per row, one double rescale-and-round per cell
-    * (ym = xm − rnd(2·wx/w'w · w)), back to exact doubles ym/1e6. ONE
-    * codegen'd projection, no shuffle — at 100 TB the rotation rides
-    * the encode/probe scan it feeds.
-    */
-  def opqRotate(embeddings: DataFrame, w: Array[Long], ww: Long,
-                d: Int): DataFrame =
-    opqRotateK(embeddings, Seq((w, ww)), d)
-
   /** Apply an ORDERED list of stored Householders to a
-    * (vec_id, embedding) relation — [[opqRotate]]'s k-reflection
-    * general form (VERDICT r19 #4): micro-quantize once, then per
+    * (vec_id, embedding) relation — the [[Opq]] integer discipline
+    * verbatim (VERDICT r19 #4): micro-quantize once, then per
     * reflection one exact-long w·x fold and one double
-    * rescale-and-round per cell, all within ONE scan (k map steps, no
+    * rescale-and-round per cell (ym = xm − rnd(2·wx/w'w · w)), back to
+    * exact doubles ym/1e6, all within ONE scan (k map steps, no
     * shuffle — at 100 TB the whole composition rides the encode/probe
     * scan it feeds). Every intermediate rides as a GENERATOR child
     * (explode of a 1-element array) — the r11 ccid discipline:
@@ -3212,7 +2887,7 @@ object ProductQuant {
     * evaluated once per row.
     */
   def opqRotateK(embeddings: DataFrame,
-                 rots: Seq[(Array[Long], Long)], d: Int): DataFrame = {
+                 rots: Seq[(Seq[Long], Long)], d: Int): DataFrame = {
     require(rots.nonEmpty, "opqRotateK: empty rotation list")
     val quant = graft.Tables.spread(embeddings)
       .filter(col("embedding").isNotNull)
@@ -3237,62 +2912,6 @@ object ProductQuant {
     rotated.select(col("vec_id"), explode(array(expr(
       "transform(xm, c -> cast(c / cast(1000000 as double) as float))")))
       .as("embedding"))
-  }
-
-  /** Probe the store's LIVE generation of OPQ-ROTATED codes with books
-    * AND ROTATION loaded from the store — [[ivfadcProbeStore]]'s twin
-    * for the opq scheme, closing the r18 gap where opq codes had no
-    * deployment answer: the caller passes RAW embeddings and the store
-    * supplies the rotation its codes were produced under, so a
-    * probe-only process needs nothing but the store path. The rotated
-    * relation feeds the ordinary flat probe — opq codes ARE flat codes
-    * of rotated vectors, and the rerank cosine is rotation-invariant
-    * up to the stored integer discipline.
-    */
-  def ivfadcOpqProbeStore(embeddings: DataFrame, queryPred: Column,
-                          k: Int, baseDir: String, nProbe: Int = 4,
-                          dim: Option[Int] = None,
-                          gen: Option[Int] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    val (_, genDir) = resolveGeneration(spark, baseDir, gen)
-    val ((coarse, bySub), meta) = loadQuantizersMeta(spark, genDir)
-    if (meta.scheme != "opq") throw new IllegalStateException(
-      s"store at $baseDir holds ${meta.scheme}-encoded codes — probe " +
-        "it with the matching probe path, not the opq rotation")
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    if (meta.dim != d) throw new IllegalStateException(
-      s"store at $baseDir was encoded at dim ${meta.dim}; the probe " +
-        s"corpus is dim $d — refusing a geometry-mismatched probe")
-    // loadQuantizersMeta guarantees the rotation is present for opq
-    val rots = meta.rotation.get.map { case (ws, x) => (ws.toArray, x) }
-    ivfadcProbeIndex(opqRotateK(embeddings, rots, d), queryPred, k,
-      genDir, coarse, bySub, nProbe, Some(d),
-      excludeIds = hintedTombstones(spark, baseDir))
-  }
-
-  /** The OPQ deployment path in one call (VERDICT r18 #5 —
-    * [[ivfadcStoreProbeTopK]]'s twin for the rotated encoder): learn
-    * the rotation from the corpus ([[opqRotationOf]]), rotate, train
-    * the quantizers IN THE ROTATED SPACE (the books must live where
-    * the codes do — Ge §4's fixed-rotation step), publish codes +
-    * books + rotation as one self-describing generation carrying
-    * `scheme = opq`, and probe through everything LOADED FROM THE
-    * STORE. A flat probe of this store — or an opq probe of a flat
-    * store — refuses loudly on the recorded scheme (spec-pinned).
-    */
-  def opqStoreTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-                   baseDir: String, nCoarse: Int = 16, nProbe: Int = 4,
-                   dim: Option[Int] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (w, ww) = opqRotationOf(embeddings, d)
-    val rot = opqRotate(embeddings, w, ww, d)
-    val (coarse, bySub) = ivfadcQuantizers(rot, nCoarse, d)
-    publishIndex(spark, baseDir, ivfadcCodesWith(rot, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)), scheme = "opq",
-      rotation = Some(Seq((w, ww))))
-    ivfadcOpqProbeStore(embeddings, queryPred, k, baseDir, nProbe,
-      Some(d))
   }
 
   /** Apply the [[adcShortlist]] rule to a (q_id, vec_id, adc6) scored
@@ -3344,32 +2963,20 @@ object ProductQuant {
                        nCoarse: Int = 16,
                        dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val subLen = d / AdcM
-    // both quantizers off ONE md5-prefix corpus collect (the
-    // ivfadcQuantizers rationale); embN is adcParts' corpus-with-norm
-    // shape with the same null exclusion
-    graft.functions.PqKernels.register(embeddings.sparkSession)
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    val (coarse, bySub) = ivfadcQuantizers(embeddings, nCoarse, d)
+    val books = trainBooks(embeddings, Scheme.Flat, nCoarse, d)
+    val embN = normed(embeddings, d, spread = true)
     val sweepL = sweep.map(_.toLong).sorted
     // single-scan composed index row, exactly ivfadcStage1's shape
-    val enc = explodeVia(embN,
-      Seq(col("vec_id"),
-        coarseAssignCol(col("embedding"), col("nrm"), coarse).as("ccid")),
-      allCodesCol(col("embedding"), bySub, subLen, Some(col("nrm"))),
-      Seq("sub", "code"))
+    val enc = encodeN(embN, books, d)
     // ranked probes up to the widest sweep point; membership in sweep
     // point n ⇔ 0-based rank p0 < n, emitted as an array-filter explode
     val qprobe = embN.filter(queryPred)
       .select(col("vec_id").as("q_id"),
-        posexplode(assignTopCol(col("embedding"), coarse, 0, 0, d,
+        posexplode(assignTopCol(col("embedding"), books.coarse, 0, 0, d,
           sweepL.max.toInt, Some(col("nrm")))).as(Seq("p0", "ccid")))
       .select(col("q_id"), col("ccid"),
         explode(filter(typedLit(sweepL), n => n > col("p0"))).as("nprobe"))
-    val lut = adcLut(embN, queryPred, bySub, subLen)
+    val lut = adcLut(embN, queryPred, books.fine, d / AdcM)
     val qrel = qprobe.join(lut, "q_id")
     val pre = enc.join(broadcast(qrel), Seq("ccid", "sub", "code"))
       .filter(col("q_id") =!= col("vec_id"))
@@ -3454,7 +3061,7 @@ object ProductQuant {
     // ONE collect of the trained codebook feeds both encode sides — a
     // second collect would re-run the whole training job.
     val bySub = collectCodebook(codebook(embeddings, d))
-    // spread before the encode projection (adcParts note); encodeWith
+    // spread before the encode projection ([[normed]] note); encodeWith
     // itself stays spread-free so the streaming ingest face can reuse it
     val codes = encodeWith(graft.Tables.spread(embeddings), bySub, d)
     val qCodes =

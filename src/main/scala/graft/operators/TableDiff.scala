@@ -51,10 +51,19 @@ object TableDiff {
       chunkBy: String,
       chunkWidth: Long,
       range: String = "1 = 1",
-      maxPushdownRanges: Int = 32,
-      maxBroadcastChunks: Int = 100000,
       hashBuckets: Option[Int] = None,
       crcCompat: Boolean = false)
+
+  /** The row pass takes the range-pushdown tier up to this many MERGED
+    * bad-chunk ranges (see [[rowDiff]] for why merged ranges, not ids).
+    */
+  private val MaxPushdownRanges = 32
+
+  /** The row pass takes the broadcast semi-join tier up to this many bad
+    * chunk ids (~800 KB of driver-collected longs); past it, drift is
+    * pervasive and the flat full-table join is cheaper.
+    */
+  private val MaxBroadcastChunks = 100000
 
   /** Chunk-id expression for a side under the spec's chunking mode. */
   private def chunkCol(df: DataFrame, spec: DiffSpec): Column =
@@ -101,15 +110,10 @@ object TableDiff {
     if (spec.crcCompat) {
       // crc lane only — the md5 lane is not computed here unless hash
       // bucketing needs it for the chunk id.
-      val base = df.filter(expr(spec.range))
+      df.filter(expr(spec.range))
         .withColumn("row_crc", Canonical.crcRow(fpCols(df)))
-      val chunked = spec.hashBuckets match {
-        case Some(b) => base.withColumn("chunk_id",
-          Canonical.chunkIdFromFp(Canonical.fingerprint48(fpCols(df)), b))
-        case None => base.withColumn("chunk_id",
-          Canonical.chunkId(col(spec.chunkBy), spec.chunkWidth))
-      }
-      chunked.groupBy("chunk_id")
+        .withColumn("chunk_id", chunkCol(df, spec))
+        .groupBy("chunk_id")
         .agg(count(lit(1)).as("cnt"), expr("bit_xor(row_crc)").as("checksum"))
     } else
       withFingerprint(df, spec)
@@ -217,11 +221,11 @@ object TableDiff {
     if (!twoPhase) return join(up, down)
 
     // One phase-1 pass collects bad chunk ids (driver memory bounded by
-    // maxBroadcastChunks ≈ 800 KB). Nothing is cached — the previous
+    // MaxBroadcastChunks ≈ 800 KB). Nothing is cached — the previous
     // persist-based variant leaked MEMORY_AND_DISK cache across calls
     // (ADVICE r01).
     val ids = badChunks(up, down, spec).select("chunk_id")
-      .limit(spec.maxBroadcastChunks + 1)
+      .limit(MaxBroadcastChunks + 1)
       .collect().map(_.getLong(0)).toSeq
 
     // The pushdown tier is gated on the count of MERGED ranges, not raw
@@ -231,10 +235,10 @@ object TableDiff {
     // benched slower than the semi tier). Few/contiguous ranges are the
     // case where min/max stats actually prune IO.
     lazy val ranges = mergedRanges(ids, spec)
-    if (spec.hashBuckets.isEmpty && ranges.length <= spec.maxPushdownRanges) {
+    if (spec.hashBuckets.isEmpty && ranges.length <= MaxPushdownRanges) {
       val pred = chunkRangePredicate(ids, spec)
       join(up.filter(pred), down.filter(pred))
-    } else if (ids.length <= spec.maxBroadcastChunks) {
+    } else if (ids.length <= MaxBroadcastChunks) {
       // Moderate drift: broadcast the id list (local relation — no
       // recompute of phase 1) and semi-join both sides on chunk_id.
       join(pruneToChunks(up, ids, spec), pruneToChunks(down, ids, spec))

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.operators._
+import graft.operators.ProductQuant.Scheme
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,6 +35,51 @@ object PipelineQueries {
       .withColumn("recall",
         round(col("hits").cast("double") / col("k_truth"), 6))
       .orderBy("query_id")
+  }
+
+  /** The WHOLE store lifecycle composed into one face, under the scheme
+    * `schemeOf` builds from the standing corpus (VERDICT r17 #3; the
+    * residual and opq compositions, r18 #2 and r19 #1) — every verb is
+    * individually green, but seams hide in composition: publish v1
+    * (standing corpus, books trained on it — an OPQ rotation is learned
+    * there too and freezes with the books) → incremental ingest (v2 =
+    * the grown corpus under the SAME frozen books — append == rebuild)
+    * → between-epoch deletes (tombstones) → compact (physical delete +
+    * sidecar GC, the books carrying scheme and rotation forward) →
+    * retention prune → coarse retrain on the surviving corpus (flat and
+    * opq codes re-list under the Lloyd-1 assignment, residual codes
+    * re-encode against it; fine books carried forward) → probe through
+    * BOOKS LOADED FROM THE STORE. The probe reads the scheme from the
+    * sidecar, so a scheme or rotation dropped anywhere along the way
+    * mis-scores and the oracle row goes red. The oracle is a
+    * from-scratch DuckDB lane over the surviving corpus: fine books
+    * trained on the standing subset (in its rotation, on its residuals
+    * under the standing-sampled coarse book), coarse book = the kmeans
+    * chain over survivors, candidates = survivors (re-encoded for
+    * residual), queries untouched by deletes.
+    */
+  private def indexLifecycle(s: SparkSession, dir: String, scratch: String,
+                             schemeOf: (DataFrame, Int) => Scheme)
+      : DataFrame = {
+    val e = emb(s, dir)
+    val d = Similarity.dimOf(e)
+    val base = graft.Scratch.dir(scratch)
+    val standing = e.filter(col("vec_id") < 400)
+    val books =
+      ProductQuant.trainBooks(standing, schemeOf(standing, d), 16, d)
+    ProductQuant.publishIndex(s, base,
+      ProductQuant.codesWith(standing, books, d), books = Some(books))
+    ProductQuant.publishIndex(s, base,
+      ProductQuant.codesWith(e, books, d), books = Some(books))
+    ProductQuant.writeTombstones(s, base,
+      e.filter(col("vec_id") % 9 === 3).select("vec_id"))
+    ProductQuant.compactStore(s, base)
+    ProductQuant.pruneGenerations(s, base, keep = 1)
+    ProductQuant.retrainStore(s, base,
+      e.filter(col("vec_id") % 9 =!= 3), 16)
+    ProductQuant.ivfadcProbeStore(e, col("vec_id") < 50, 3, base,
+      dim = Some(d))
+      .orderBy("query_id", "rank")
   }
 
   /** Corpus with planted exact duplicates (fixtures ship none): every
@@ -1091,7 +1137,8 @@ object PipelineQueries {
     // "true IVFADC" item; Jégou 2011 §V). Scoring, shortlist rule, and
     // exact rerank are shared with ann_pq_adc — one definition.
     "ann_ivfadc" -> ((s, dir) =>
-      ProductQuant.ivfadcTopK(emb(s, dir), col("vec_id") < 50, 3)
+      ProductQuant.ivfadcTopK(emb(s, dir), col("vec_id") < 50, 3,
+        Scheme.Flat)
         .orderBy("query_id", "rank")),
 
     // IVFADC against the PERSISTED ccid-partitioned index
@@ -1125,8 +1172,8 @@ object PipelineQueries {
     // (ann_ivfadc_probe) each verified half of. Row-identical to
     // ann_ivfadc_partitioned by construction; same oracle SQL.
     "ann_ivfadc_store_probe" -> ((s, dir) =>
-      ProductQuant.ivfadcStoreProbeTopK(emb(s, dir), col("vec_id") < 50,
-        3, graft.Scratch.dir("ivfadc_store_face_"))
+      ProductQuant.ivfadcStoreTopK(emb(s, dir), col("vec_id") < 50,
+        3, graft.Scratch.dir("ivfadc_store_face_"), Scheme.Flat)
         .orderBy("query_id", "rank")),
 
     // The store's DELETE verb at probe time (round 16): tombstone
@@ -1140,11 +1187,10 @@ object PipelineQueries {
     "ann_ivfadc_tombstoned" -> ((s, dir) => {
       val e = emb(s, dir)
       val d = Similarity.dimOf(e)
-      val (coarse, bySub) = ProductQuant.ivfadcQuantizers(e, 16, d)
+      val books = ProductQuant.trainBooks(e, Scheme.Flat, 16, d)
       val base = graft.Scratch.dir("ivfadc_tomb_")
       ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcCodesWith(e, coarse, bySub, d),
-        quantizers = Some((coarse, bySub)))
+        ProductQuant.codesWith(e, books, d), books = Some(books))
       ProductQuant.writeTombstones(s, base,
         e.filter(col("vec_id") % 9 === 3).select("vec_id"))
       // books loaded from the store, not the ones in scope — the
@@ -1415,150 +1461,14 @@ object PipelineQueries {
         .orderBy("part", "ccid", "status")
     }),
 
-    // The WHOLE store lifecycle composed into one face (VERDICT r17
-    // #3) — every verb is individually green, but seams hide in
-    // composition: publish v1 (standing corpus, frozen books) →
-    // incremental ingest (v2 = the grown corpus under the SAME frozen
-    // books — append == rebuild) → between-epoch deletes (tombstones)
-    // → compact (physical delete + sidecar GC) → retention prune →
-    // coarse retrain on the surviving corpus (re-list under the
-    // Lloyd-1 assignment, fine books carried forward) → probe through
-    // BOOKS LOADED FROM THE STORE. The oracle is a from-scratch DuckDB
-    // lane over the surviving corpus: fine books trained on the
-    // standing subset, coarse book = the kmeans chain over survivors,
-    // candidates = survivors, queries untouched by deletes.
-    "index_lifecycle" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val d = Similarity.dimOf(e)
-      val base = graft.Scratch.dir("idx_life_")
-      val standing = e.filter(col("vec_id") < 400)
-      val (coarse, bySub) = ProductQuant.ivfadcQuantizers(standing, 16, d)
-      ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcCodesWith(standing, coarse, bySub, d),
-        quantizers = Some((coarse, bySub)))
-      ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcCodesWith(e, coarse, bySub, d),
-        quantizers = Some((coarse, bySub)))
-      ProductQuant.writeTombstones(s, base,
-        e.filter(col("vec_id") % 9 === 3).select("vec_id"))
-      ProductQuant.compactStore(s, base)
-      ProductQuant.pruneGenerations(s, base, keep = 1)
-      ProductQuant.retrainStore(s, base,
-        e.filter(col("vec_id") % 9 =!= 3), 16)
-      ProductQuant.ivfadcProbeStore(e, col("vec_id") < 50, 3, base,
-        dim = Some(d))
-        .orderBy("query_id", "rank")
-    }),
-
-    // The residual scheme's composed lifecycle (VERDICT r18 #2):
-    // index_lifecycle is flat-only, and the residual seams that differ
-    // — frozen-RESIDUAL-book ingest, compaction carrying
-    // scheme=residual forward in the sidecar, retrainResidual
-    // RE-ENCODING survivors against the new coarse book instead of
-    // re-listing coarse-relative code words, and the loaded-books
-    // probe through the residual reconstruction — had never run in
-    // ONE face. Same shape as the flat twin: publish v1 (standing,
-    // residual books) → frozen-book ingest (v2 = grown corpus) →
-    // between-epoch deletes → compact (+scheme carry-forward, asserted
-    // loudly here) → prune → retrain-on-survivors → probe through
-    // BOOKS LOADED FROM THE STORE. Oracle = a from-scratch DuckDB lane
-    // over the surviving corpus: fine books trained on the standing
-    // subset's residuals under the standing-sampled coarse book, the
-    // retrained coarse book = the Lloyd-1 chain over survivors,
-    // candidates = survivors RE-ENCODED against it, scoring = coarse
-    // dot + residual LUT sum.
-    "index_lifecycle_residual" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val d = Similarity.dimOf(e)
-      val base = graft.Scratch.dir("idx_life_res_")
-      val standing = e.filter(col("vec_id") < 400)
-      val (coarse, bySubF) =
-        ProductQuant.ivfadcResidualQuantizers(standing, 16, d)
-      ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcResidualCodesWith(standing, coarse, bySubF, d),
-        quantizers = Some((coarse, bySubF)), scheme = "residual")
-      ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcResidualCodesWith(e, coarse, bySubF, d),
-        quantizers = Some((coarse, bySubF)), scheme = "residual")
-      ProductQuant.writeTombstones(s, base,
-        e.filter(col("vec_id") % 9 === 3).select("vec_id"))
-      ProductQuant.compactStore(s, base)
-      // the encoding contract must survive the compaction — a dropped
-      // scheme would brick the probe below anyway, but fail HERE,
-      // specifically
-      val postCompact = ProductQuant.loadQuantizersMeta(s,
-        ProductQuant.currentIndexDir(s, base))._2.scheme
-      require(postCompact == "residual",
-        s"compaction dropped the residual scheme: read '$postCompact'")
-      ProductQuant.pruneGenerations(s, base, keep = 1)
-      ProductQuant.retrainStore(s, base,
-        e.filter(col("vec_id") % 9 =!= 3), 16)
-      ProductQuant.ivfadcResidualProbeStore(e, col("vec_id") < 50, 3,
-        base, dim = Some(d))
-        .orderBy("query_id", "rank")
-    }),
-
-    // The OPQ scheme's composed lifecycle (VERDICT r19 #1): the opq
-    // seams — compact carrying scheme+rotation, retrain re-listing in
-    // the STORED rotation's space, frozen-rotation ingest, and the
-    // loaded-rotation probe — had each run alone but never in ONE
-    // face. Same shape as the flat/residual twins: publish v1
-    // (standing corpus; rotation learned from it, books trained in the
-    // rotated space) → frozen-rotation ingest (v2 = grown corpus,
-    // SAME w and books) → between-epoch deletes → compact (scheme AND
-    // rotation carry-forward asserted loudly here) → prune → retrain
-    // on survivors (re-list under a coarse book retrained in the
-    // stored rotation's space — opq codes are flat codes of rotated
-    // vectors) → probe with everything LOADED FROM THE STORE. Oracle =
-    // a from-scratch DuckDB lane run entirely in the standing-learned
-    // rotation: fine books from the rotated standing subset, retrained
-    // coarse book = the Lloyd-1 chain over rotated survivors,
-    // candidates = rotated survivors, rerank cosine over rotated
-    // vectors; deleted vectors query but are never candidates.
-    "index_lifecycle_opq" -> ((s, dir) => {
-      val e = emb(s, dir)
-      val d = Similarity.dimOf(e)
-      val base = graft.Scratch.dir("idx_life_opq_")
-      val standing = e.filter(col("vec_id") < 400)
-      val (w, ww) = ProductQuant.opqRotationOf(standing, d)
-      val rotStanding = ProductQuant.opqRotate(standing, w, ww, d)
-      val (coarse, bySub) = ProductQuant.ivfadcQuantizers(rotStanding, 16, d)
-      ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcCodesWith(rotStanding, coarse, bySub, d),
-        quantizers = Some((coarse, bySub)), scheme = "opq",
-        rotation = Some(Seq((w, ww))))
-      // frozen-rotation ingest: the grown corpus rotates under the
-      // SAME w — a re-learned rotation would re-rotate the space the
-      // standing code words quantize in
-      ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcCodesWith(
-          ProductQuant.opqRotate(e, w, ww, d), coarse, bySub, d),
-        quantizers = Some((coarse, bySub)), scheme = "opq",
-        rotation = Some(Seq((w, ww))))
-      ProductQuant.writeTombstones(s, base,
-        e.filter(col("vec_id") % 9 === 3).select("vec_id"))
-      ProductQuant.compactStore(s, base)
-      // the encoding contract must survive the compaction — scheme AND
-      // rotation; a dropped/mangled rotation would brick (or worse,
-      // silently mis-rotate) the probe below — fail HERE, specifically
-      val postCompact = ProductQuant.loadQuantizersMeta(s,
-        ProductQuant.currentIndexDir(s, base))._2
-      require(postCompact.scheme == "opq",
-        s"compaction dropped the opq scheme: read '${postCompact.scheme}'")
-      require(postCompact.rotation.contains(Seq((w.toSeq, ww))),
-        "compaction dropped or mangled the stored rotation")
-      ProductQuant.pruneGenerations(s, base, keep = 1)
-      ProductQuant.retrainStore(s, base,
-        e.filter(col("vec_id") % 9 =!= 3), 16)
-      val postRetrain = ProductQuant.loadQuantizersMeta(s,
-        ProductQuant.currentIndexDir(s, base))._2
-      require(postRetrain.scheme == "opq" &&
-          postRetrain.rotation.contains(Seq((w.toSeq, ww))),
-        "retrain dropped or mangled the stored rotation")
-      ProductQuant.ivfadcOpqProbeStore(e, col("vec_id") < 50, 3, base,
-        dim = Some(d))
-        .orderBy("query_id", "rank")
-    }),
+    // The store lifecycle (indexLifecycle scaladoc), once per scheme.
+    "index_lifecycle" -> ((s, dir) =>
+      indexLifecycle(s, dir, "idx_life_", (_, _) => Scheme.Flat)),
+    "index_lifecycle_residual" -> ((s, dir) =>
+      indexLifecycle(s, dir, "idx_life_res_", (_, _) => Scheme.Residual)),
+    "index_lifecycle_opq" -> ((s, dir) =>
+      indexLifecycle(s, dir, "idx_life_opq_", (standing, d) =>
+        Scheme.Opq(Seq(ProductQuant.opqRotationOf(standing, d))))),
 
     // Time-travel probe (VERDICT r19 #6 — the reference's per-source
     // snapshot pin, S6, applied to the index store): v1 publishes from
@@ -1575,14 +1485,12 @@ object PipelineQueries {
       val d = Similarity.dimOf(e)
       val base = graft.Scratch.dir("idx_pin_")
       val standing = e.filter(col("vec_id") < 400)
-      val (c1, b1) = ProductQuant.ivfadcQuantizers(standing, 16, d)
+      val b1 = ProductQuant.trainBooks(standing, Scheme.Flat, 16, d)
       val (g1, _) = ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcCodesWith(standing, c1, b1, d),
-        quantizers = Some((c1, b1)))
-      val (c2, b2) = ProductQuant.ivfadcQuantizers(e, 16, d)
+        ProductQuant.codesWith(standing, b1, d), books = Some(b1))
+      val b2 = ProductQuant.trainBooks(e, Scheme.Flat, 16, d)
       ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcCodesWith(e, c2, b2, d),
-        quantizers = Some((c2, b2)))
+        ProductQuant.codesWith(e, b2, d), books = Some(b2))
       ProductQuant.ivfadcProbeStore(e, col("vec_id") < 50, 3, base,
         dim = Some(d), gen = Some(g1))
         .orderBy("query_id", "rank")
@@ -1597,7 +1505,8 @@ object PipelineQueries {
     // index level (standing files byte-identical, spec-asserted).
     "ann_ivfadc_ingest" -> ((s, dir) =>
       ProductQuant.ivfadcIngestTopK(emb(s, dir), col("vec_id") < 400,
-        col("vec_id") < 50, 3, graft.Scratch.dir("ivfadc_ingest_"))
+        col("vec_id") < 50, 3, graft.Scratch.dir("ivfadc_ingest_"),
+        Scheme.Flat)
         .orderBy("query_id", "rank")),
 
     // Recall gate for IVFADC — exact-truth contract: probing can only
@@ -1608,28 +1517,27 @@ object PipelineQueries {
     "ivfadc_recall" -> ((s, dir) => {
       val e = emb(s, dir)
       recallGate(Similarity.bruteForceTopK(e, col("vec_id") < 50, 3),
-        ProductQuant.ivfadcTopK(e, col("vec_id") < 50, 3))
+        ProductQuant.ivfadcTopK(e, col("vec_id") < 50, 3, Scheme.Flat))
     }),
 
-    // Residual IVFADC (ProductQuant.ivfadcResidualTopK scaladoc) — the
+    // Residual IVFADC (ProductQuant.ivfadcTopK scaladoc) — the
     // full Jégou §V encoding: the fine quantizer compresses x̂ − ĉ and
     // a candidate's score reconstructs as coarse dot + residual LUT
     // sum, exact in integer micro-units end to end.
     "ann_ivfadc_residual" -> ((s, dir) =>
-      ProductQuant.ivfadcResidualTopK(emb(s, dir), col("vec_id") < 50, 3)
+      ProductQuant.ivfadcTopK(emb(s, dir), col("vec_id") < 50, 3,
+        Scheme.Residual)
         .orderBy("query_id", "rank")),
 
     // The residual DEPLOYMENT seam (VERDICT r17 #1): the best-fidelity
     // encoder published as a store generation whose sidecar records
     // `scheme = residual`, probed through BOOKS LOADED FROM THE STORE
-    // via the residual reconstruction (coarse dot + residual LUT sum).
-    // A flat probe of this store — or a residual probe of a flat
-    // store — refuses loudly on the recorded scheme (spec-pinned).
-    // Row-identical to ann_ivfadc_residual by construction; same
-    // oracle SQL.
+    // via the residual reconstruction (coarse dot + residual LUT sum),
+    // which the probe selects from the recorded scheme. Row-identical
+    // to ann_ivfadc_residual by construction; same oracle SQL.
     "ann_ivfadc_residual_store" -> ((s, dir) =>
-      ProductQuant.ivfadcResidualStoreTopK(emb(s, dir),
-        col("vec_id") < 50, 3, graft.Scratch.dir("ivfadc_res_store_"))
+      ProductQuant.ivfadcStoreTopK(emb(s, dir), col("vec_id") < 50, 3,
+        graft.Scratch.dir("ivfadc_res_store_"), Scheme.Residual)
         .orderBy("query_id", "rank")),
 
     // Incremental RESIDUAL ingest (VERDICT r18 #2 — the residual twin
@@ -1641,9 +1549,9 @@ object PipelineQueries {
     // too (where it matters most: a re-derived coarse book would
     // silently re-interpret every standing code word).
     "ann_ivfadc_residual_ingest" -> ((s, dir) =>
-      ProductQuant.ivfadcResidualIngestTopK(emb(s, dir),
+      ProductQuant.ivfadcIngestTopK(emb(s, dir),
         col("vec_id") < 400, col("vec_id") < 50, 3,
-        graft.Scratch.dir("ivfadc_res_ingest_"))
+        graft.Scratch.dir("ivfadc_res_ingest_"), Scheme.Residual)
         .orderBy("query_id", "rank")),
 
     // Recall gate for residual IVFADC — exact-truth contract, same
@@ -1653,7 +1561,7 @@ object PipelineQueries {
     "ivfadc_residual_recall" -> ((s, dir) => {
       val e = emb(s, dir)
       recallGate(Similarity.bruteForceTopK(e, col("vec_id") < 50, 3),
-        ProductQuant.ivfadcResidualTopK(e, col("vec_id") < 50, 3))
+        ProductQuant.ivfadcTopK(e, col("vec_id") < 50, 3, Scheme.Residual))
     }),
 
     // Quantization-distortion gauge: both ADC lanes emit their integer
@@ -1667,7 +1575,8 @@ object PipelineQueries {
       val e = emb(s, dir)
       val f = ProductQuant.adcTopK(e, col("vec_id") < 50, 3)
         .select(lit("flat").as("lane"), col("adc6"), col("score"))
-      val r = ProductQuant.ivfadcResidualTopK(e, col("vec_id") < 50, 3)
+      val r = ProductQuant.ivfadcTopK(e, col("vec_id") < 50, 3,
+        Scheme.Residual)
         .select(lit("residual").as("lane"), col("adc6"), col("score"))
       f.unionByName(r)
         .groupBy("lane")
@@ -1700,18 +1609,21 @@ object PipelineQueries {
     // The OPQ deployment seam (VERDICT r18 #5): until now the sidecar's
     // scheme enum couldn't say "these codes quantize ROTATED vectors",
     // so an opq publish would read as flat and silently mis-score —
-    // the exact failure class r18 closed for residual. opqStoreTopK
-    // learns the rotation from the corpus (the proven power-iteration
-    // integers on the RAW census), trains + encodes in the rotated
-    // space, publishes codes + books + rotation as one generation
-    // carrying scheme=opq, and probes with everything LOADED FROM THE
-    // STORE — the caller hands RAW embeddings and the store supplies
-    // its own rotation. Mismatched probes refuse in both directions
-    // (spec-pinned).
-    "ann_opq_store" -> ((s, dir) =>
-      ProductQuant.opqStoreTopK(emb(s, dir), col("vec_id") < 50, 3,
-        graft.Scratch.dir("opq_store_"))
-        .orderBy("query_id", "rank")),
+    // the exact failure class r18 closed for residual. The face learns
+    // the rotation from the corpus (the proven power-iteration integers
+    // on the RAW census); ivfadcStoreTopK trains + encodes in the
+    // rotated space, publishes codes + books + rotation as one
+    // generation carrying scheme=opq, and probes with everything LOADED
+    // FROM THE STORE — the caller hands RAW embeddings and the store
+    // supplies its own rotation.
+    "ann_opq_store" -> ((s, dir) => {
+      val e = emb(s, dir)
+      val d = Similarity.dimOf(e)
+      ProductQuant.ivfadcStoreTopK(e, col("vec_id") < 50, 3,
+        graft.Scratch.dir("opq_store_"),
+        Scheme.Opq(Seq(ProductQuant.opqRotationOf(e, d))), dim = Some(d))
+        .orderBy("query_id", "rank")
+    }),
 
     // Incremental OPQ ingest (VERDICT r19 #1 — the opq twin of
     // ann_ivfadc_ingest): the ROTATION learns from the standing corpus
@@ -1722,10 +1634,15 @@ object PipelineQueries {
     // standing-trained books — green proves the ingest never re-learns
     // the rotation (which would silently re-rotate the space every
     // standing code word quantizes in) nor the books.
-    "ann_opq_ingest" -> ((s, dir) =>
-      ProductQuant.opqIngestTopK(emb(s, dir), col("vec_id") < 400,
-        col("vec_id") < 50, 3, graft.Scratch.dir("opq_ingest_"))
-        .orderBy("query_id", "rank")),
+    "ann_opq_ingest" -> ((s, dir) => {
+      val e = emb(s, dir)
+      val d = Similarity.dimOf(e)
+      ProductQuant.ivfadcIngestTopK(e, col("vec_id") < 400,
+        col("vec_id") < 50, 3, graft.Scratch.dir("opq_ingest_"),
+        Scheme.Opq(Seq(ProductQuant.opqRotationOf(
+          e.filter(col("vec_id") < 400), d))), dim = Some(d))
+        .orderBy("query_id", "rank")
+    }),
 
     // Additive ANN-index ingest (ProductQuant.encodeWithBook scaladoc):
     // the codebook trains on the STANDING corpus only (vec_id < 400),
@@ -2585,14 +2502,14 @@ object PipelineQueries {
 
   /** Residual-lifecycle mirror (VERDICT r18 #2): the final probe of
     * the composed residual publish → frozen-book ingest → delete →
-    * compact → prune → retrainResidual → loaded-books probe, rebuilt
+    * compact → prune → re-encoding retrain → loaded-books probe, rebuilt
     * FROM SCRATCH. Fine books train on the STANDING subset's
     * residuals under the standing-sampled coarse book (ccent0/cas0 —
     * the [[annIvfadcResOracleFrom]] convention); the retrained coarse
     * book is the Lloyd-1 chain over the SURVIVORS
     * (centk→ak→compk→centrn, the [[indexLifecycleOracle]] convention);
     * candidates are the survivors RE-ENCODED against the retrained
-    * normalized book (casn/rsurv — what retrainResidual publishes,
+    * normalized book (casn/rsurv — what retrainStore publishes,
     * never a re-list of coarse-relative code words); the probe scores
     * coarse dot + residual LUT sum over books "loaded from the store";
     * deleted vectors query but are never candidates.
@@ -3071,7 +2988,7 @@ object PipelineQueries {
        |lab AS (SELECT a AS doc_id, min(b) AS canonical_id FROM reach
        |        GROUP BY a)""".stripMargin
 
-  /** Residual-IVFADC mirror (ProductQuant.ivfadcResidualTopK): the
+  /** Residual-IVFADC mirror (ProductQuant.ivfadcTopK, Scheme.Residual): the
     * coarse CTEs as in the non-residual face, then `rall` materializes
     * every vector's residual (normalized vector minus assigned coarse
     * centroid) and the SHARED pq chain trains/encodes over residuals.

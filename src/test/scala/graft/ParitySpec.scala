@@ -566,17 +566,15 @@ class CliSpec extends SparkSpec {
   test("publish --index --books stands up a probe-able store from the shell; mismatches refuse (r19)") {
     val e = Tables.load(spark, sfDir, "embeddings")
     val d = Similarity.dimOf(e)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(e, 16, d)
+    val books = ProductQuant.trainBooks(e, ProductQuant.Scheme.Flat, 16, d)
     // a source generation holding the books — the "copy the sidecar
     // from last night's publish" shape a shell operator actually has
     val src = Files.createTempDirectory("graft_books_src").toString
     ProductQuant.publishIndex(spark, src,
-      ProductQuant.ivfadcCodesWith(e, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)))
+      ProductQuant.codesWith(e, books, d), books = Some(books))
     val srcGen = ProductQuant.currentIndexDir(spark, src)
     val codesDir = Files.createTempDirectory("graft_codes_b").toString + "/c"
-    ProductQuant.ivfadcCodesWith(e, coarse, bySub, d)
-      .write.parquet(codesDir)
+    ProductQuant.codesWith(e, books, d).write.parquet(codesDir)
     // bookless publish still works; the doctor names the gap
     val bare = Files.createTempDirectory("graft_store_bare").toString
     val (cb, _) = doctorOut(Array("publish", "--index", bare, codesDir))
@@ -618,17 +616,14 @@ class CliSpec extends SparkSpec {
     val d = Similarity.dimOf(e)
     // an opq source store: rotation + rotated-space books + codes
     val src = Files.createTempDirectory("graft_opq_src").toString
-    val (w, ww) = ProductQuant.opqRotationOf(e, d)
-    val rot = ProductQuant.opqRotate(e, w, ww, d)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(rot, 16, d)
+    val scheme = ProductQuant.Scheme.Opq(
+      Seq(ProductQuant.opqRotationOf(e, d)))
+    val books = ProductQuant.trainBooks(e, scheme, 16, d)
     ProductQuant.publishIndex(spark, src,
-      ProductQuant.ivfadcCodesWith(rot, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)), scheme = "opq",
-      rotation = Some(Seq((w, ww))))
+      ProductQuant.codesWith(e, books, d), books = Some(books))
     val srcGen = ProductQuant.currentIndexDir(spark, src)
     val codesDir = Files.createTempDirectory("graft_opq_codes").toString + "/c"
-    ProductQuant.ivfadcCodesWith(rot, coarse, bySub, d)
-      .write.parquet(codesDir)
+    ProductQuant.codesWith(e, books, d).write.parquet(codesDir)
     // bootstrap from the shell: the rotation must ride the --books
     // forward (ADVICE r19 #2 — a scheme-only forward threw
     // writeQuantizers' half-publish refusal)
@@ -636,13 +631,12 @@ class CliSpec extends SparkSpec {
     val (gen, _) = ProductQuant.publishStore(spark, store, codesDir,
       booksDir = Some(srcGen))
     assert(gen == 1)
-    val meta = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, store))._2
-    assert(meta.scheme == "opq" &&
-      meta.rotation.contains(Seq((w.toSeq, ww))),
+    val meta = ProductQuant.loadBooks(spark,
+      ProductQuant.currentIndexDir(spark, store)).meta
+    assert(meta.scheme == scheme,
       s"bootstrap dropped or mangled the rotation: $meta")
     // and the opq probe of the bootstrapped store matches the source
-    def rows(base: String) = ProductQuant.ivfadcOpqProbeStore(e,
+    def rows(base: String) = ProductQuant.ivfadcProbeStore(e,
         col("vec_id") < 30, 3, base, dim = Some(d))
       .select("query_id", "cand_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
@@ -777,10 +771,9 @@ class CliSpec extends SparkSpec {
     val d = Similarity.dimOf(e)
     // 1) healthy flat store with books and one delete batch
     val store = Files.createTempDirectory("graft_djson").toString
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(e, 16, d)
+    val books = ProductQuant.trainBooks(e, ProductQuant.Scheme.Flat, 16, d)
     ProductQuant.publishIndex(spark, store,
-      ProductQuant.ivfadcCodesWith(e, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)))
+      ProductQuant.codesWith(e, books, d), books = Some(books))
     ProductQuant.writeTombstones(spark, store,
       e.filter(col("vec_id") % 50 === 0).select("vec_id"))
     val (c1, j1) = dj(store)

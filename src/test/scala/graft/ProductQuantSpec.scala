@@ -1,12 +1,16 @@
 package graft
 
 import graft.operators.{ProductQuant, Similarity}
+import graft.operators.ProductQuant.Scheme
 import org.apache.spark.sql.functions._
 
 class ProductQuantSpec extends SparkSpec {
   import spark.implicits._
 
   private def emb = Tables.load(spark, sfDir, "embeddings")
+
+  /** One quantizer-sidecar row: (kind, sub, ord, cid, cv). */
+  private type Row5 = (String, Int, Int, Long, Seq[Double])
 
   test("codebook is bounded M*Ks with subspace-length centroids") {
     val dim = Similarity.dimOf(emb)
@@ -43,7 +47,8 @@ class ProductQuantSpec extends SparkSpec {
     val part = ProductQuant.ivfadcPartitionedTopK(emb, col("vec_id") < 3,
       3, idxDir, nProbe = 2)
     val rows = part.orderBy("query_id", "rank").collect()
-    val mem = ProductQuant.ivfadcTopK(emb, col("vec_id") < 3, 3, nProbe = 2)
+    val mem = ProductQuant.ivfadcTopK(emb, col("vec_id") < 3, 3, Scheme.Flat,
+        nProbe = 2)
       .orderBy("query_id", "rank").collect()
     assert(rows.nonEmpty && rows.map(_.toSeq).toSeq == mem.map(_.toSeq).toSeq,
       "partitioned face must be row-identical to the in-memory face")
@@ -66,7 +71,7 @@ class ProductQuantSpec extends SparkSpec {
     // stage 1 alone: run the face but capture the file state between
     // write and append by re-running the standing write ourselves
     val r = ProductQuant.ivfadcIngestTopK(emb, standing, col("vec_id") < 3,
-      3, idxDir, nProbe = 2)
+      3, idxDir, Scheme.Flat, nProbe = 2)
     val rows = r.orderBy("query_id", "rank").collect()
     assert(rows.nonEmpty)
     // the merged index holds BOTH batches' codes
@@ -85,7 +90,8 @@ class ProductQuantSpec extends SparkSpec {
         .map(_.toString).toSet
     val after = files()
     val r2 = ProductQuant.ivfadcIngestTopK(emb, standing, col("vec_id") < 3,
-      3, idxDir, nProbe = 2).orderBy("query_id", "rank").collect()
+      3, idxDir, Scheme.Flat, nProbe = 2)
+      .orderBy("query_id", "rank").collect()
     assert(rows.map(_.toSeq).toSeq == r2.map(_.toSeq).toSeq,
       "ingest must be deterministic across re-runs")
     assert(files().size == after.size,
@@ -174,15 +180,17 @@ class ProductQuantSpec extends SparkSpec {
     // flat ADC stage-1 pre-agg size: every code row meets every query's
     // LUT entry once (minus self-pairs)
     val flatPairs = (corpus - 1) * nQueries * ProductQuant.AdcM
+    val d = Similarity.dimOf(emb)
+    val books = ProductQuant.trainBooks(emb, Scheme.Flat, 16, d)
     val ivfadcPairs = ProductQuant
-      .ivfadcStage1(emb, col("vec_id") < 50, 16, 4).count()
+      .ivfadcStage1(emb, col("vec_id") < 50, books, 4, d).count()
     assert(ivfadcPairs > 0)
     // 4 probes of 16 lists: expect ~1/4 of the flat scan; assert the
     // headline claim conservatively (strictly under half)
     assert(ivfadcPairs * 2 < flatPairs,
       s"ivfadc stage-1 $ivfadcPairs pairs vs flat $flatPairs")
     // every stage-1 row carries exactly the composed-index shape
-    val row = ProductQuant.ivfadcStage1(emb, col("vec_id") < 50, 16, 4)
+    val row = ProductQuant.ivfadcStage1(emb, col("vec_id") < 50, books, 4, d)
       .select("ccid", "sub", "code", "q_id", "vec_id").limit(1).collect()
     assert(row.length == 1)
   }
@@ -203,7 +211,9 @@ class ProductQuantSpec extends SparkSpec {
       s"nprobe=16 probes every list, got ${out(16L)}‰")
     val nQ = emb.filter(q).count()
     val n = emb.count()
-    val pairs2 = ProductQuant.ivfadcStage1(emb, q, 16, 2).count() /
+    val d = Similarity.dimOf(emb)
+    val pairs2 = ProductQuant.ivfadcStage1(emb, q,
+        ProductQuant.trainBooks(emb, Scheme.Flat, 16, d), 2, d).count() /
       ProductQuant.AdcM
     assert(out(2L) == 1000L * pairs2 / (nQ * (n - 1)),
       s"sweep census diverged from the stage-1 fold at nprobe=2: " +
@@ -245,7 +255,7 @@ class ProductQuantSpec extends SparkSpec {
     // definition, not two implementations drifting). Full agreement is
     // NOT expected — probing legitimately changes the candidate pool
     // (ivfadcTopK scaladoc's measured curve).
-    val ivf = ProductQuant.ivfadcTopK(emb, col("vec_id") < 50, 3)
+    val ivf = ProductQuant.ivfadcTopK(emb, col("vec_id") < 50, 3, Scheme.Flat)
       .select("query_id", "cand_id", "score")
       .as[(Long, Long, Double)].collect()
     assert(ivf.nonEmpty)
@@ -263,7 +273,7 @@ class ProductQuantSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     def recallAt(np: Int): Double = {
       val got = ProductQuant
-        .ivfadcTopK(emb, col("vec_id") < 50, 3, nProbe = np)
+        .ivfadcTopK(emb, col("vec_id") < 50, 3, Scheme.Flat, nProbe = np)
         .select("query_id", "cand_id")
         .as[(Long, Long)].collect().toSet
       truth.count(got.contains).toDouble / truth.size
@@ -291,10 +301,10 @@ class ProductQuantSpec extends SparkSpec {
 
   test("compactIndex restores the 1-file-per-list invariant with rows intact") {
     val d = Similarity.dimOf(emb)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(emb, 16, d)
+    val books = ProductQuant.trainBooks(emb, Scheme.Flat, 16, d)
     val idx = Scratch.dir("compact_spec_")
     def codes(p: org.apache.spark.sql.Column) =
-      ProductQuant.ivfadcCodesWith(emb.filter(p), coarse, bySub, d)
+      ProductQuant.codesWith(emb.filter(p), books, d)
         .repartition(col("ccid")).sortWithinPartitions("ccid", "vec_id", "sub")
     codes(col("vec_id") % 2 === 0)
       .write.mode("overwrite").partitionBy("ccid").parquet(idx)
@@ -480,14 +490,14 @@ class ProductQuantSpec extends SparkSpec {
     // compaction it landed on
     val e = emb
     val d = Similarity.dimOf(e)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(e, 16, d)
+    val books = ProductQuant.trainBooks(e, Scheme.Flat, 16, d)
     val base = Scratch.dir("tomb_parity_")
     ProductQuant.publishIndex(spark, base,
-      ProductQuant.ivfadcCodesWith(e, coarse, bySub, d))
+      ProductQuant.codesWith(e, books, d), books = Some(books))
     ProductQuant.writeTombstones(spark, base,
       e.filter(col("vec_id") % 9 === 3).select("vec_id"))
-    def probe() = ProductQuant.ivfadcProbeStoreWith(e, col("vec_id") < 30,
-        3, base, coarse, bySub, dim = Some(d))
+    def probe() = ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30,
+        3, base, dim = Some(d))
       .select("query_id", "cand_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     val before = probe()
@@ -532,14 +542,16 @@ class ProductQuantSpec extends SparkSpec {
     val e = emb
     val d = Similarity.dimOf(e)
     val base = Scratch.dir("self_desc_")
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(e, 16, d)
+    val books = ProductQuant.trainBooks(e, Scheme.Flat, 16, d)
+    val (coarse, bySub) = (books.coarse, books.fine)
     ProductQuant.publishIndex(spark, base,
-      ProductQuant.ivfadcCodesWith(e, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)))
+      ProductQuant.codesWith(e, books, d), books = Some(books))
     // the sidecar round-trips BIT-identically: same ids, same order,
     // same components — loaded literals plan exactly like trained ones
-    val (c2, b2) = ProductQuant.loadQuantizers(spark,
+    val loaded = ProductQuant.loadBooks(spark,
       ProductQuant.currentIndexDir(spark, base))
+    assert(loaded.scheme == Scheme.Flat)
+    val (c2, b2) = (loaded.coarse, loaded.fine)
     assert(c2.map(_._1) == coarse.map(_._1))
     assert(c2.zip(coarse).forall { case ((_, a), (_, b)) =>
       a.sameElements(b) })
@@ -559,8 +571,8 @@ class ProductQuantSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     val got = rows(ProductQuant.ivfadcProbeStore(e2, col("vec_id") < 30, 3,
       base, dim = Some(d)))
-    val want = rows(ProductQuant.ivfadcProbeStoreWith(e, col("vec_id") < 30,
-      3, base, coarse, bySub, dim = Some(d)))
+    val want = rows(ProductQuant.ivfadcProbeIndex(e, col("vec_id") < 30,
+      3, ProductQuant.currentIndexDir(spark, base), books, dim = Some(d)))
     assert(got.nonEmpty && got == want)
     // a bookless generation (raw-codes publish) fails LOUDLY, never
     // probes wrongly
@@ -568,7 +580,7 @@ class ProductQuantSpec extends SparkSpec {
     ProductQuant.publishIndex(spark, bare,
       ProductQuant.uniformSyntheticCodes(e))
     intercept[java.util.NoSuchElementException] {
-      ProductQuant.loadQuantizers(spark,
+      ProductQuant.loadBooks(spark,
         ProductQuant.currentIndexDir(spark, bare))
     }
     // the retrain remedy KEEPS the store self-describing (round-17
@@ -576,8 +588,10 @@ class ProductQuantSpec extends SparkSpec {
     // RETRAINED L2-normalized coarse book, and the loaded-books probe
     // keeps working on the new generation
     ProductQuant.retrainStore(spark, base, e, 16)
-    val (c3, b3) = ProductQuant.loadQuantizers(spark,
+    val retrained = ProductQuant.loadBooks(spark,
       ProductQuant.currentIndexDir(spark, base))
+    assert(retrained.scheme == Scheme.Flat)
+    val (c3, b3) = (retrained.coarse, retrained.fine)
     assert(c3.length == 16)
     assert(b3.keySet == bySub.keySet && b3.forall { case (s, cents) =>
       cents.map(_._1) == bySub(s).map(_._1) })
@@ -762,49 +776,63 @@ class ProductQuantSpec extends SparkSpec {
   test("the store records its encoding scheme; mismatched probes refuse; residual retrain re-encodes (r18)") {
     val e = emb
     val d = Similarity.dimOf(e)
-    // flat store: the sidecar meta reads back flat with the books'
-    // geometry, and the RESIDUAL probe refuses on it
-    val flatBase = Scratch.dir("scheme_flat_")
-    val (fc, fb) = ProductQuant.ivfadcQuantizers(e, 16, d)
-    ProductQuant.publishIndex(spark, flatBase,
-      ProductQuant.ivfadcCodesWith(e, fc, fb, d),
-      quantizers = Some((fc, fb)))
-    val (_, flatMeta) = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, flatBase))
-    assert(flatMeta == ProductQuant.IndexMeta("flat", 16, 8, 16, d))
-    val e1 = intercept[IllegalStateException] {
-      ProductQuant.ivfadcResidualProbeStore(e, col("vec_id") < 30, 3,
-        flatBase, dim = Some(d))
-    }
-    assert(e1.getMessage.contains("flat-encoded"))
-    // residual store: scheme recorded, the FLAT probe refuses, the
-    // residual store probe matches the inline residual face
-    // row-for-row from a fresh session (books loaded, not held)
-    val resBase = Scratch.dir("scheme_res_")
+    // adc6 — the scheme's approximate score — rides along, so equal
+    // rows mean equal scoring, not just an equal exact rerank
     def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "cand_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    val got = rows(ProductQuant.ivfadcResidualStoreTopK(e,
-      col("vec_id") < 30, 3, resBase, dim = Some(d)))
-    val (_, resMeta) = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, resBase))
-    assert(resMeta.scheme == "residual" && resMeta.dim == d)
-    val e2 = intercept[IllegalStateException] {
-      ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30, 3, resBase,
-        dim = Some(d))
-    }
-    assert(e2.getMessage.contains("residual-encoded"))
+      df.select("query_id", "cand_id", "adc6", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
+        .sorted.toSeq
+    // the ONE store probe takes no scheme: from a fresh session it reads
+    // the scheme from each store's sidecar and returns that scheme's
+    // in-memory answer — a flat LUT over residual codes (or the residual
+    // reconstruction over flat codes) cannot be asked for
     val s2 = spark.newSession()
-    val want = rows(ProductQuant.ivfadcResidualTopK(
-      Tables.load(s2, sfDir, "embeddings"), col("vec_id") < 30, 3))
-    assert(got.nonEmpty && got == want)
+    val e2 = Tables.load(s2, sfDir, "embeddings")
+    val flatBase = Scratch.dir("scheme_flat_")
+    val resBase = Scratch.dir("scheme_res_")
+    ProductQuant.ivfadcStoreTopK(e, col("vec_id") < 30, 3, flatBase,
+      Scheme.Flat, dim = Some(d)).count()
+    ProductQuant.ivfadcStoreTopK(e, col("vec_id") < 30, 3, resBase,
+      Scheme.Residual, dim = Some(d)).count()
+    def meta(base: String) = ProductQuant.loadBooks(spark,
+      ProductQuant.currentIndexDir(spark, base)).meta
+    assert(meta(flatBase) == ProductQuant.IndexMeta(Scheme.Flat, 16, 8, 16, d))
+    assert(meta(resBase).scheme == Scheme.Residual && meta(resBase).dim == d)
+    Seq(flatBase -> Scheme.Flat, resBase -> Scheme.Residual).foreach {
+      case (base, scheme) =>
+        val got = rows(ProductQuant.ivfadcProbeStore(e2, col("vec_id") < 30,
+          3, base))
+        val want = rows(ProductQuant.ivfadcTopK(e2, col("vec_id") < 30, 3,
+          scheme))
+        assert(got.nonEmpty && got == want, s"${scheme.name} store probe")
+    }
+    // the two schemes' approximate scores really differ on this
+    // fixture, so the equalities above pin the scheme each probe read
+    assert(rows(ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30, 3,
+      flatBase, dim = Some(d))) != rows(ProductQuant.ivfadcProbeStore(e,
+      col("vec_id") < 30, 3, resBase, dim = Some(d))))
+    // a geometry-mismatched probe refuses
+    val dimEx = intercept[IllegalStateException] {
+      ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30, 3, resBase,
+        dim = Some(d / 2))
+    }
+    assert(dimEx.getMessage.contains("geometry-mismatched"), dimEx.getMessage)
     // compaction carries the scheme forward with the books
     ProductQuant.writeTombstones(spark, resBase,
       e.filter(col("vec_id") % 9 === 3).select("vec_id"))
     ProductQuant.compactStore(spark, resBase)
-    assert(ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, resBase))._2.scheme ==
-      "residual")
+    assert(meta(resBase).scheme == Scheme.Residual)
+    // a geometry-mismatched retrain refuses before it publishes anything
+    val gBefore = ProductQuant.currentGeneration(spark, resBase).map(_._1)
+    val half = e.select(col("vec_id"),
+      expr(s"slice(embedding, 1, ${d / 2})").as("embedding"))
+    val rdimEx = intercept[IllegalStateException] {
+      ProductQuant.retrainStore(spark, resBase, half, 16)
+    }
+    assert(rdimEx.getMessage.contains("geometry-mismatched"),
+      rdimEx.getMessage)
+    assert(ProductQuant.currentGeneration(spark, resBase).map(_._1) ==
+      gBefore)
     // retrain on a residual generation RE-ENCODES against the new
     // coarse book (a re-list would corrupt coarse-relative codes):
     // content is preserved — nothing added or removed vs the compacted
@@ -815,12 +843,95 @@ class ProductQuantSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(diff.getOrElse("added", 0L) == 0L &&
       diff.getOrElse("removed", 0L) == 0L, diff.toString)
-    val post = ProductQuant.ivfadcResidualProbeStore(e,
+    val post = ProductQuant.ivfadcProbeStore(e,
       col("vec_id") < 30, 3, resBase, dim = Some(d))
     assert(post.count() > 0)
-    assert(ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, resBase))._2.scheme ==
-      "residual")
+    assert(meta(resBase).scheme == Scheme.Residual)
+  }
+
+  test("the sidecar's on-disk rows are pinned per scheme: written rows match the layout, parent-layout sidecars load") {
+    val d = 16
+    val coarse = Seq((7L, Array.tabulate(d)(i => i * 0.25)),
+      (3L, Array.tabulate(d)(i => -i * 0.5)))
+    val fine = Map(0 -> Seq((5L, Array(0.5, 1.5)), (2L, Array(-1.0, 2.0))),
+      1 -> Seq((9L, Array(0.125, 0.0))))
+    val rot1 = Seq((Seq.tabulate(d)(i => (i * 37L) % 11 - 5), 1234L))
+    val rot2 = rot1 :+ ((Seq.tabulate(d)(i => (i * 13L) % 7 - 3), 567L))
+    val schemes = Seq(0L -> Scheme.Flat, 1L -> Scheme.Residual,
+      2L -> Scheme.Opq(rot1), 2L -> Scheme.Opq(rot2))
+    // the exact row layout every stored generation carries: one meta
+    // row (scheme code; nCoarse, m, ks, dim), one rot row per
+    // reflection in application order, then the coarse and book rows
+    def layout(code: Long, scheme: Scheme): Seq[Row5] = {
+      val rots = scheme match {
+        case Scheme.Opq(r) => r
+        case _             => Nil
+      }
+      Seq[Row5](("meta", -1, 0, code, Seq(2.0, 2.0, 2.0, d.toDouble))) ++
+        rots.zipWithIndex.map { case ((w, ww), i) =>
+          ("rot", -1, i, ww, w.map(_.toDouble)) } ++
+        coarse.zipWithIndex.map { case ((c, v), i) =>
+          ("coarse", -1, i, c, v.toSeq) } ++
+        fine.toSeq.sortBy(_._1).flatMap { case (s, cs) =>
+          cs.zipWithIndex.map { case ((c, v), i) =>
+            ("book", s, i, c, v.toSeq) } }
+    }
+    def read(gen: String): Seq[Row5] = spark.read
+      .parquet(gen + "/" + ProductQuant.QuantizerDir)
+      .select("kind", "sub", "ord", "cid", "cv")
+      .as[Row5].collect().toSeq
+    def same(a: ProductQuant.Books, b: ProductQuant.Books): Boolean =
+      a.scheme == b.scheme &&
+        a.coarse.map(c => (c._1, c._2.toSeq)) ==
+          b.coarse.map(c => (c._1, c._2.toSeq)) &&
+        a.fine.map { case (s, cs) => s -> cs.map(c => (c._1, c._2.toSeq)) } ==
+          b.fine.map { case (s, cs) => s -> cs.map(c => (c._1, c._2.toSeq)) }
+    schemes.foreach { case (code, scheme) =>
+      val books = ProductQuant.Books(scheme, coarse, fine)
+      // the writer produces exactly the layout
+      val written = Scratch.dir(s"sidecar_w_${scheme.name}_")
+      ProductQuant.writeQuantizers(spark, written, books)
+      assert(read(written).sortBy(r => (r._1, r._2, r._3)) ==
+        layout(code, scheme).sortBy(r => (r._1, r._2, r._3)),
+        s"${scheme.name} sidecar rows drifted from the stored layout")
+      // a sidecar hand-written in that layout (what earlier binaries
+      // left on disk) loads as the same books
+      val parent = Scratch.dir(s"sidecar_p_${scheme.name}_")
+      layout(code, scheme).toDF("kind", "sub", "ord", "cid", "cv")
+        .write.parquet(parent + "/" + ProductQuant.QuantizerDir)
+      assert(same(ProductQuant.loadBooks(spark, parent), books),
+        s"${scheme.name}: a stored sidecar no longer loads as its books")
+    }
+    // a pre-meta sidecar (no meta row) reads as flat
+    val legacy = Scratch.dir("sidecar_legacy_")
+    layout(0L, Scheme.Flat).filter(_._1 != "meta")
+      .toDF("kind", "sub", "ord", "cid", "cv")
+      .write.parquet(legacy + "/" + ProductQuant.QuantizerDir)
+    assert(ProductQuant.loadBooks(spark, legacy).scheme == Scheme.Flat)
+    // corrupt sidecars refuse: an unknown scheme code, opq without its
+    // rotation, a rotation beside flat codes or beside no meta row, a
+    // meta row disagreeing with its books, a rotation of the wrong dim
+    val corrupt = Seq[Seq[Row5]](
+      layout(3L, Scheme.Flat),
+      layout(2L, Scheme.Flat),
+      layout(2L, Scheme.Opq(rot1)).map(r =>
+        if (r._1 == "meta") r.copy(_4 = 0L) else r),
+      layout(2L, Scheme.Opq(rot1)).filter(_._1 != "meta"),
+      layout(1L, Scheme.Residual).map(r =>
+        if (r._1 == "meta") r.copy(_5 = Seq(2.0, 2.0, 2.0, 8.0)) else r),
+      layout(2L, Scheme.Opq(rot1)).map(r =>
+        if (r._1 == "rot") r.copy(_5 = r._5.take(8)) else r))
+    corrupt.zipWithIndex.foreach { case (rows, i) =>
+      val gen = Scratch.dir(s"sidecar_bad_${i}_")
+      rows.toDF("kind", "sub", "ord", "cid", "cv")
+        .write.parquet(gen + "/" + ProductQuant.QuantizerDir)
+      intercept[IllegalStateException] {
+        ProductQuant.loadBooks(spark, gen)
+      }
+    }
+    // OPQ without a rotation is unrepresentable, so no writer can
+    // produce the half-published state the loader refuses
+    intercept[IllegalArgumentException] { Scheme.Opq(Nil) }
   }
 
   test("indexGenDiff classifies moved-list vectors as recoded under the new list") {
@@ -887,61 +998,39 @@ class ProductQuantSpec extends SparkSpec {
     val e = emb
     val d = Similarity.dimOf(e)
     val base = Scratch.dir("opq_scheme_")
-    assert(ProductQuant.opqStoreTopK(e, col("vec_id") < 30, 3, base)
-      .count() > 0)
-    // a flat probe of an opq store refuses, naming the right path
-    val e1 = intercept[IllegalStateException] {
-      ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30, 3, base,
-        dim = Some(d))
-    }
-    assert(e1.getMessage.contains("ivfadcOpqProbeStore"), e1.getMessage)
-    // ...so does the residual reconstruction
-    intercept[IllegalStateException] {
-      ProductQuant.ivfadcResidualProbeStore(e, col("vec_id") < 30, 3,
-        base, dim = Some(d))
-    }
-    // ...and an opq probe of a FLAT store refuses the other way
-    val flatBase = Scratch.dir("opq_flat_")
-    ProductQuant.ivfadcStoreProbeTopK(e, col("vec_id") < 30, 3, flatBase)
-      .count()
-    val e2 = intercept[IllegalStateException] {
-      ProductQuant.ivfadcOpqProbeStore(e, col("vec_id") < 30, 3,
-        flatBase, dim = Some(d))
-    }
-    assert(e2.getMessage.contains("flat"), e2.getMessage)
-    // the rotation is part of the contract in both directions at the
-    // WRITER already: flat+rotation and opq-without-rotation refuse
-    val books = (Seq((0L, Array.fill(d)(0.1))),
-      Map(0 -> Seq((0L, Array.fill(8)(0.1)))))
-    intercept[IllegalArgumentException] {
-      ProductQuant.writeQuantizers(spark, Scratch.dir("opq_bad_"),
-        books._1, books._2, scheme = "flat",
-        rotation = Some(Seq((Array.fill(d)(1L), d.toLong))))
-    }
-    intercept[IllegalArgumentException] {
-      ProductQuant.writeQuantizers(spark, Scratch.dir("opq_bad2_"),
-        books._1, books._2, scheme = "opq")
-    }
+    val scheme = Scheme.Opq(Seq(ProductQuant.opqRotationOf(e, d)))
+    assert(ProductQuant.ivfadcStoreTopK(e, col("vec_id") < 30, 3, base,
+      scheme, dim = Some(d)).count() > 0)
+    assert(ProductQuant.loadBooks(spark,
+      ProductQuant.currentIndexDir(spark, base)).scheme == scheme)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "cand_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    // the one store probe, from a fresh session handed RAW embeddings,
+    // applies the stored rotation and returns the in-memory opq answer
+    val s2 = spark.newSession()
+    val e2 = Tables.load(s2, sfDir, "embeddings")
+    val got = rows(ProductQuant.ivfadcProbeStore(e2, col("vec_id") < 30, 3,
+      base))
+    assert(got.nonEmpty &&
+      got == rows(ProductQuant.ivfadcTopK(e2, col("vec_id") < 30, 3, scheme)))
     // compaction carries scheme AND rotation; deletes apply physically
-    def probe() = ProductQuant.ivfadcOpqProbeStore(e, col("vec_id") < 30,
-        3, base, dim = Some(d))
-      .select("query_id", "cand_id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    assert(probe().nonEmpty)
+    def probe() = rows(ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30,
+        3, base, dim = Some(d)))
     ProductQuant.writeTombstones(spark, base,
       e.filter(col("vec_id") % 7 === 2).select("vec_id"))
     ProductQuant.compactStore(spark, base)
-    val metaC = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, base))._2
-    assert(metaC.scheme == "opq" && metaC.rotation.nonEmpty)
+    val schemeC = ProductQuant.loadBooks(spark,
+      ProductQuant.currentIndexDir(spark, base)).scheme
+    assert(schemeC == scheme, schemeC.toString)
     val after = probe()
     assert(after.nonEmpty && after.forall(_._2 % 7 != 2))
     // retrain re-lists IN THE ROTATED SPACE and keeps the rotation
     ProductQuant.retrainStore(spark, base,
       e.filter(col("vec_id") % 7 =!= 2), 16)
-    val metaR = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, base))._2
-    assert(metaR.scheme == "opq" && metaR.rotation == metaC.rotation)
+    val schemeR = ProductQuant.loadBooks(spark,
+      ProductQuant.currentIndexDir(spark, base)).scheme
+    assert(schemeR == scheme, schemeR.toString)
     assert(probe().nonEmpty)
   }
 
@@ -950,42 +1039,42 @@ class ProductQuantSpec extends SparkSpec {
     val d = Similarity.dimOf(e)
     val rots = ProductQuant.opqRotationsOf2(e, d)
     assert(rots.length == 2)
-    val rot = ProductQuant.opqRotateK(e, rots, d)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(rot, 16, d)
+    val scheme = Scheme.Opq(rots)
+    val books = ProductQuant.trainBooks(e, scheme, 16, d)
     val base = Scratch.dir("opq_k2_")
     ProductQuant.publishIndex(spark, base,
-      ProductQuant.ivfadcCodesWith(rot, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)), scheme = "opq",
-      rotation = Some(rots))
-    val stored = rots.map { case (w, ww) => (w.toSeq, ww) }
-    val meta = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, base))._2
-    assert(meta.rotation.contains(stored),
-      s"k=2 rotation did not round-trip in order: $meta")
+      ProductQuant.codesWith(e, books, d), books = Some(books))
+    val stored = ProductQuant.loadBooks(spark,
+      ProductQuant.currentIndexDir(spark, base)).scheme
+    assert(stored == scheme,
+      s"k=2 rotation did not round-trip in order: $stored")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    // the probe-only process (RAW corpus in, rotations loaded from the
-    // store, applied in order) equals the build session's in-hand probe
-    val got = rows(ProductQuant.ivfadcOpqProbeStore(e,
-      col("vec_id") < 30, 3, base, dim = Some(d)))
-    val want = rows(ProductQuant.ivfadcProbeIndex(rot,
+    // the probe-only process (RAW corpus in a fresh session, rotations
+    // loaded from the store, applied in order) equals both the build
+    // session's in-hand probe and the in-memory k=2 opq answer
+    val s2 = spark.newSession()
+    val e2 = Tables.load(s2, sfDir, "embeddings")
+    val got = rows(ProductQuant.ivfadcProbeStore(e2,
+      col("vec_id") < 30, 3, base))
+    val want = rows(ProductQuant.ivfadcProbeIndex(e,
       col("vec_id") < 30, 3, ProductQuant.currentIndexDir(spark, base),
-      coarse, bySub, dim = Some(d)))
+      books, dim = Some(d)))
     assert(got.nonEmpty && got == want)
+    assert(got == rows(ProductQuant.ivfadcTopK(e2, col("vec_id") < 30, 3,
+      scheme)))
     // compact and retrain both carry the 2-row rotation verbatim
     ProductQuant.writeTombstones(spark, base,
       e.filter(col("vec_id") % 11 === 5).select("vec_id"))
     ProductQuant.compactStore(spark, base)
-    assert(ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, base))._2.rotation
-      .contains(stored))
+    assert(ProductQuant.loadBooks(spark,
+      ProductQuant.currentIndexDir(spark, base)).scheme == scheme)
     ProductQuant.retrainStore(spark, base,
       e.filter(col("vec_id") % 11 =!= 5), 16)
-    assert(ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, base))._2.rotation
-      .contains(stored))
-    val after = rows(ProductQuant.ivfadcOpqProbeStore(e,
+    assert(ProductQuant.loadBooks(spark,
+      ProductQuant.currentIndexDir(spark, base)).scheme == scheme)
+    val after = rows(ProductQuant.ivfadcProbeStore(e,
       col("vec_id") < 30, 3, base, dim = Some(d)))
     assert(after.nonEmpty && after.forall(_._2 % 11 != 5))
   }
@@ -994,10 +1083,10 @@ class ProductQuantSpec extends SparkSpec {
     val e = emb
     val d = Similarity.dimOf(e)
     val base = Scratch.dir("idx_pin_refuse_")
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(e, 16, d)
-    val codes = ProductQuant.ivfadcCodesWith(e, coarse, bySub, d)
+    val books = ProductQuant.trainBooks(e, Scheme.Flat, 16, d)
+    val codes = ProductQuant.codesWith(e, books, d)
     (1 to 3).foreach(_ => ProductQuant.publishIndex(spark, base, codes,
-      quantizers = Some((coarse, bySub))))
+      books = Some(books)))
     // retained pin works and equals the live probe (same codes/books)
     val pinned = ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30, 3,
       base, dim = Some(d), gen = Some(2)).count()
@@ -1018,10 +1107,10 @@ class ProductQuantSpec extends SparkSpec {
   test("versioned tombstone fold: a reader holding a pre-fold relation stays evaluable across concurrent folds (r20)") {
     val e = emb
     val d = Similarity.dimOf(e)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(e, 16, d)
+    val books = ProductQuant.trainBooks(e, Scheme.Flat, 16, d)
     val base = Scratch.dir("tomb_ver_")
     ProductQuant.publishIndex(spark, base,
-      ProductQuant.ivfadcCodesWith(e, coarse, bySub, d))
+      ProductQuant.codesWith(e, books, d), books = Some(books))
     ProductQuant.writeTombstones(spark, base,
       e.filter(col("vec_id") % 5 === 0).select("vec_id"))
     // reader A lists BEFORE the first fold (loose appends only)
@@ -1045,8 +1134,8 @@ class ProductQuantSpec extends SparkSpec {
     assert(relB.select("vec_id").distinct().count() == nB,
       "fold 2 broke a reader relation listed before it")
     // the probe consumes the folded sidecar with no double-counting
-    val got = ProductQuant.ivfadcProbeStoreWith(e, col("vec_id") < 30,
-      3, base, coarse, bySub, dim = Some(d)).collect()
+    val got = ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30,
+      3, base, dim = Some(d)).collect()
     assert(got.nonEmpty &&
       got.forall(r => r.getAs[Long]("cand_id") % 5 > 1))
     // settle: a compaction publishes a clean generation; after
@@ -1070,10 +1159,10 @@ class ProductQuantSpec extends SparkSpec {
     try {
       val e = emb
       val d = Similarity.dimOf(e)
-      val (coarse, bySub) = ProductQuant.ivfadcQuantizers(e, 16, d)
+      val books = ProductQuant.trainBooks(e, Scheme.Flat, 16, d)
       val base = Scratch.dir("tomb_fold_")
       ProductQuant.publishIndex(spark, base,
-        ProductQuant.ivfadcCodesWith(e, coarse, bySub, d))
+        ProductQuant.codesWith(e, books, d), books = Some(books))
       ProductQuant.writeTombstones(spark, base,
         e.filter(col("vec_id") % 3 === 0).select("vec_id"))
       val n = ProductQuant.gcTombstones(spark, base)
@@ -1099,8 +1188,8 @@ class ProductQuantSpec extends SparkSpec {
       assert(ProductQuant.tombstones(spark, base).get
         .select("vec_id").distinct().count() == n,
         "mid-fold superset must dedup to the surviving set")
-      val got = ProductQuant.ivfadcProbeStoreWith(e, col("vec_id") < 30,
-        3, base, coarse, bySub, dim = Some(d)).collect()
+      val got = ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30,
+        3, base, dim = Some(d)).collect()
       assert(got.nonEmpty && got.forall(
         _.getAs[Long]("cand_id") % 3 != 0))
       // the next GC folds the superset back to the derived width

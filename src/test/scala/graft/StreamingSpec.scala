@@ -433,7 +433,7 @@ class StreamingPartitionedIndexSpec extends SparkSpec {
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select("vec_id", "embedding").filter(col("embedding").isNotNull)
     val d = Similarity.dimOf(emb)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(emb, 16, d)
+    val books = ProductQuant.trainBooks(emb, ProductQuant.Scheme.Flat, 16, d)
     val streamDir = Scratch.dir("stream_pidx_")
     val rows = emb.as[VecRow].collect().toSeq
     val mem = org.apache.spark.sql.execution.streaming.runtime
@@ -443,7 +443,7 @@ class StreamingPartitionedIndexSpec extends SparkSpec {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          _: Long) =>
           ProductQuant.writeIndex(
-            ProductQuant.ivfadcCodesWith(batch.toDF(), coarse, bySub, d,
+            ProductQuant.codesWith(batch.toDF(), books, d,
               spread = false),
             streamDir, mode = "append")
           ()
@@ -487,7 +487,7 @@ class StreamingPartitionedIndexSpec extends SparkSpec {
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select("vec_id", "embedding").filter(col("embedding").isNotNull)
     val d = Similarity.dimOf(emb)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(emb, 16, d)
+    val books = ProductQuant.trainBooks(emb, ProductQuant.Scheme.Flat, 16, d)
     val staging = Scratch.dir("stream_stage_")
     val store = Scratch.dir("stream_store_")
     val rows = emb.as[VecRow].collect().toSeq
@@ -498,7 +498,7 @@ class StreamingPartitionedIndexSpec extends SparkSpec {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          _: Long) =>
           ProductQuant.writeIndex(
-            ProductQuant.ivfadcCodesWith(batch.toDF(), coarse, bySub, d,
+            ProductQuant.codesWith(batch.toDF(), books, d,
               spread = false),
             staging, mode = "append")
           ProductQuant.publishIndex(spark, store,
@@ -560,7 +560,7 @@ class StreamingPartitionedIndexSpec extends SparkSpec {
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select("vec_id", "embedding").filter(col("embedding").isNotNull)
     val d = Similarity.dimOf(emb)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(emb, 16, d)
+    val books = ProductQuant.trainBooks(emb, ProductQuant.Scheme.Flat, 16, d)
     val staging = Scratch.dir("stream_del_stage_")
     val store = Scratch.dir("stream_del_store_")
     val rows = emb.as[VecRow].collect().toSeq
@@ -571,7 +571,7 @@ class StreamingPartitionedIndexSpec extends SparkSpec {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          _: Long) =>
           ProductQuant.writeIndex(
-            ProductQuant.ivfadcCodesWith(batch.toDF(), coarse, bySub, d,
+            ProductQuant.codesWith(batch.toDF(), books, d,
               spread = false),
             staging, mode = "append")
           // each epoch publishes a SELF-DESCRIBING generation: the
@@ -580,7 +580,7 @@ class StreamingPartitionedIndexSpec extends SparkSpec {
             spark.read.parquet(staging)
               .select(col("vec_id"), col("ccid").cast("int").as("ccid"),
                 col("sub"), col("code")),
-            quantizers = Some((coarse, bySub)))
+            books = Some(books))
           ()
       }
       .start()
@@ -614,8 +614,8 @@ class StreamingPartitionedIndexSpec extends SparkSpec {
     def codes(dir: String): Set[Seq[Any]] = spark.read.parquet(dir)
       .select(col("vec_id"), col("ccid").cast("int"), col("sub"),
         col("code")).collect().map(_.toSeq).toSet
-    val want = ProductQuant.ivfadcCodesWith(
-        emb.filter(col("vec_id") % 9 =!= 3), coarse, bySub, d)
+    val want = ProductQuant.codesWith(
+        emb.filter(col("vec_id") % 9 =!= 3), books, d)
       .select(col("vec_id"), col("ccid").cast("int"), col("sub"),
         col("code")).collect().map(_.toSeq).toSet
     assert(codes(ProductQuant.currentIndexDir(spark, store)) == want,
